@@ -49,17 +49,22 @@ object Bench {
     "java.base/sun.security.action", "java.base/sun.util.calendar"
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
-  /** Parse a -Xmx-style size ("32g", "512m", "90112m") into MiB. */
-  private def sizeToMb(s: String): Long = {
-    val t = s.trim.toLowerCase
-    val (num, unit) = t.span(c => c.isDigit)
-    val n = num.toLong
-    unit match {
-      case "g" | "gb" => n * 1024
-      case "m" | "mb" | "" => n
-      case "k" | "kb" => math.max(1L, n / 1024)
-      case "t" | "tb" => n * 1024 * 1024
-      case _ => n
+  /** Parse a -Xmx-style size ("32g", "512m", "90112m", "2gb") into MiB; a
+    * bare number is MiB. Anything else ("1.5g", "32 g", "lots") is refused
+    * rather than read as some other size. */
+  private[graft] def sizeToMb(s: String): Long = {
+    val m = "^(\\d+)([kmgt]?)b?$".r
+    s.trim.toLowerCase match {
+      case m(num, unit) =>
+        val n = num.toLong
+        unit match {
+          case "t" => n * 1024 * 1024
+          case "g" => n * 1024
+          case "k" => math.max(1L, n / 1024)
+          case _ => n
+        }
+      case _ => throw new IllegalArgumentException(
+        s"malformed size '$s': want digits with an optional k/m/g/t unit, e.g. 32g")
     }
   }
 

@@ -200,7 +200,8 @@ object CorpusState {
     * later delta segments (plain union — ords are disjoint, rows
     * immutable). Missing columns fill with null so segments written by
     * OLDER kernel schemas keep reading after Signature gains columns —
-    * the Iceberg schema-evolution behavior. */
+    * the Iceberg schema-evolution behavior. One job-free read per
+    * committed dir ([[Ckpt.read]]: schema from the parquet footer). */
   def readSignatures(spark: SparkSession, corpusWork: String, v: Int): DataFrame = {
     val (base, start) = latestSnapshot(spark, corpusWork, v) match {
       case Some(k) => (snapSigPath(corpusWork, k), k + 1)
@@ -208,7 +209,7 @@ object CorpusState {
     }
     val segs = (start to v).map(sigDeltaPath(corpusWork, _))
       .filter(exists(spark, _))
-    (base +: segs).map(spark.read.parquet(_))
+    (base +: segs).map(Ckpt.read(spark, _))
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
@@ -220,7 +221,7 @@ object CorpusState {
       case Some(k) => (snapCompPath(corpusWork, k), k + 1)
       case None => (s"$corpusWork/components", 1)
     }
-    val baseDf = spark.read.parquet(base).select(col("id"), col("comp"))
+    val baseDf = Ckpt.read(spark, base).select(col("id"), col("comp"))
     val patches = (start to v).map(k => k -> compPatchPath(corpusWork, k))
       .filter(p => exists(spark, p._2))
     if (patches.size > 32)
@@ -229,7 +230,7 @@ object CorpusState {
           "run CorpusState.compact to fold them into a snapshot")
     if (patches.isEmpty) baseDf
     else patches.foldLeft(baseDf.withColumn("ver", lit(0))) { case (acc, (k, p)) =>
-      acc.unionByName(spark.read.parquet(p)
+      acc.unionByName(Ckpt.read(spark, p)
         .select(col("id"), col("comp")).withColumn("ver", lit(k)))
     }.groupBy("id")
       .agg(max(struct(col("ver"), col("comp"))).as("m"))
@@ -275,19 +276,34 @@ object CorpusState {
  * the reference's incremental rescan (scanner.rs:1251-1294: cache-hit
  * files skip hashing; here the whole corpus skips candidate generation).
  *
- * Work is delta-proportional in BOTH compute and writes:
- *   1. kernel only on delta rows (ords offset past the corpus max)
- *   2. delta ↔ corpus candidate edges via the persisted range-partitioned
- *      [[BandIndex]] (probe-side dihedral + multi-probe expansion on the
- *      small delta only). One-directional probing is EXACT: each dihedral
- *      variant hash is a fixed bit-isometry T_g of the original
- *      (pdqhash.rs:71-151 — permutation + XOR), so
- *      min_g dist(T_g(a), b) = min_g dist(a, T_g(b)) by group closure.
- *   3. delta-internal edges via the ordinary self band join
- *   4. ONLY the existing components touched by a cross edge re-enter
- *      connected components (as comp→member star edges), so merged labels
- *      stay min-ord-consistent with a full batch run while CC sees an
- *      affected-subgraph-sized input, not the corpus
+ * Work is delta-proportional in BOTH compute and writes. Stages, each
+ * checkpointed under the delta work dir:
+ *   1. `delta_signatures`: the kernel runs on delta rows only (ords offset
+ *      past the corpus max)
+ *   2. `delta_edges`: ONE probe of the persisted range-partitioned
+ *      [[BandIndex]] with the delta's band rows unioned in as pending
+ *      index rows (probe-side dihedral + multi-probe expansion on the
+ *      small delta only), so delta ↔ corpus and delta ↔ delta candidates
+ *      come out of the same pass. What the probe reports:
+ *        - delta ↔ corpus: the DELTA-SIDE minimum, min over the delta
+ *          row's dihedral variants of the distance to the corpus row's
+ *          stored hash. It is not symmetric: PDQ variants come from
+ *          transformed DCT coefficients, not a bit permutation of the
+ *          hash (see BandJoin.bandMatches), so probing from the corpus
+ *          side can give another distance. On the 1000-image bench
+ *          corpora of seeds 203, 301 and 302, 8-11% of the pairs within
+ *          distance 40 are direction-dependent; none of them crossed
+ *          the threshold.
+ *        - delta ↔ delta: the SYMMETRIC minimum over both directions —
+ *          both rows are probe rows and index rows — as in the batch
+ *          band join.
+ *      Under `contentStar` the byte-identity star edges (delta ↔ corpus
+ *      and delta-internal) join the same stage.
+ *   3. `components`: ONLY the existing components touched by a delta edge
+ *      re-enter connected components (as comp→member star edges), so
+ *      merged labels stay min-ord-consistent with a full batch run while
+ *      CC sees an affected-subgraph-sized input, not the corpus
+ *   4. `groups`: group assembly over the merged components
  *   5. the state commit writes the delta signatures + the re-labeled
  *      patch for affected components ([[CorpusState]] merge-on-read),
  *      and the delta's band keys append to the index as an atomic
@@ -449,10 +465,16 @@ object Incremental {
       s"corpus index at $indexPath was built for " +
         s"${BandIndex.algoOf(spark, indexPath)} — cannot probe as $indexAlgo")
 
-    val maxOrd = {
-      val r = corpusSig.agg(max("ord")).head()
-      if (r.isNullAt(0)) -1L else r.getLong(0) // empty corpus: start ords at 0
+    // one aggregate: the ord offset for delta rows, and the audit ceiling
+    // over has_pdq rows ONLY — the index never contains hash-less rows, so
+    // a corpus whose highest ord is a decode failure would otherwise read
+    // as "index lagging" forever and append an empty seg_repair_* every run
+    def maxOrds(sig: DataFrame): (Long, Long) = {
+      val r = sig.agg(max("ord"), max(when(col("has_pdq"), col("ord")))).head()
+      def at(i: Int) = if (r.isNullAt(i)) -1L else r.getLong(i) // empty: -1
+      (at(0), at(1))
     }
+    val (maxOrd, baseHashMaxOrd) = maxOrds(corpusSig)
 
     // index/signature consistency audit against the CURRENT state version
     // (a resumed run has already advanced the state + index past its own
@@ -460,14 +482,7 @@ object Incremental {
     val curVer = CorpusState.version(spark, corpusWork)
     val curSig = if (curVer == baseVer) corpusSig
       else CorpusState.readSignatures(spark, corpusWork, curVer)
-    // audit ceiling over has_pdq rows ONLY: the index never contains
-    // hash-less rows, so a corpus whose highest ord is a decode failure
-    // would otherwise read as "index lagging" forever and append an empty
-    // seg_repair_* every run
-    val curMaxOrd = {
-      val r = curSig.filter(col("has_pdq")).agg(max("ord")).head()
-      if (r.isNullAt(0)) -1L else r.getLong(0)
-    }
+    val curMaxOrd = if (curVer == baseVer) baseHashMaxOrd else maxOrds(curSig)._2
     val idxMax = BandIndex.maxOrd(spark, indexPath)
     require(idxMax <= curMaxOrd,
       s"band index max ord $idxMax exceeds signatures max ord $curMaxOrd — " +
@@ -477,7 +492,7 @@ object Incremental {
       BandIndex.append(curSig.where(col("ord") > idxMax), indexPath,
         segName = s"seg_repair_$curMaxOrd")
 
-    val (deltaSig, _) = ckpt.stage("delta_signatures")(
+    val (deltaSig, _, deltaRows) = ckpt.stage("delta_signatures")(
       SignatureKernel.signatures(spark, deltaImages).toDF()
         .dropDuplicates("image_id")
         // S1 semantics across runs: an image_id already in the corpus is
@@ -485,66 +500,67 @@ object Incremental {
         .join(corpusSig.select("image_id"), Seq("image_id"), "left_anti")
         .withColumn("ord", monotonically_increasing_id() + lit(maxOrd + 1)))
 
-    val (cross, _) = ckpt.stage("delta_cross_edges")({
-      val probed = BandIndex.probe(spark, indexPath, deltaSig, thr)
+    // ONE probe yields every candidate edge of the delta: the delta's own
+    // band rows ride along as `pending` index rows, so delta ↔ corpus and
+    // delta ↔ delta pairs come out of the same pass. Delta ↔ delta pairs
+    // arrive in both directions and keep the smaller distance — the
+    // symmetric minimum the batch band join reports; low-confidence pairs
+    // arrive as pairwise exact edges instead of the batch join's star,
+    // which yields the same components.
+    val (edges, _, _) = ckpt.stage("delta_edges")({
+      val probed = BandIndex.probe(spark, indexPath, deltaSig, thr,
+          pending = Some(deltaSig))
         .select(least(col("a"), col("b")).as("a"),
           greatest(col("a"), col("b")).as("b"), col("dist"))
-      if (!contentStar) probed
-      else {
-        // delta ↔ corpus byte-identity: link each delta row to the MIN
-        // corpus ord holding its content hash (star — corpus rows with
-        // that hash are already connected among themselves by the prior
-        // contentStar runs, enforced by the _meta_content_star stamp).
-        // The corpus scan is semi-filtered by a broadcast of the delta's
-        // DISTINCT hash set when small — gated on the distinct count
-        // (what is actually broadcast) with a cap sized for 32-byte
-        // hashes, not BandIndex's 12-byte band keys. Past it, plain
-        // shuffled join (the right plan for corpus-sized deltas).
-        val deltaHashes = deltaSig.select("content_hash").distinct()
-          .localCheckpoint() // one materialization: count + broadcast
-        val corpusSide0 = corpusSig.select(col("content_hash"), col("ord"))
-        val corpusSide =
-          if (deltaHashes.count() <= MaxContentHashBroadcast)
-            corpusSide0.join(broadcast(deltaHashes), Seq("content_hash"),
-              "left_semi")
-          else corpusSide0
-        val hubs = corpusSide.groupBy("content_hash").agg(min("ord").as("c_ord"))
-        val contentCross = deltaSig.select(col("content_hash"), col("ord"))
-          .join(hubs, "content_hash")
-          .select(least(col("ord"), col("c_ord")).as("a"),
-            greatest(col("ord"), col("c_ord")).as("b"), lit(0).as("dist"))
-        probed.unionByName(contentCross).groupBy("a", "b")
-          .agg(min("dist").as("dist"))
-      }
-    })
-
-    val (internal, _) = ckpt.stage("delta_internal_edges")({
-      val hashEdges =
-        if (algorithm == "phash") graft.lsh.BandJoin64.edges(deltaSig, thr)
-        else BandJoin.edges(deltaSig, thr)
-      if (!contentStar) hashEdges
-      else hashEdges // delta-internal byte-identity star — the SAME
-        // construction the batch pipeline unions in (shared helper, so
-        // chained-equals-batch can't drift between the two call sites)
-        .unionByName(BandJoin.contentStarEdges(deltaSig))
-        .groupBy("a", "b").agg(min("dist").as("dist"))
+      val withContent =
+        if (!contentStar) probed
+        else {
+          // delta ↔ corpus byte-identity: link each delta row to the MIN
+          // corpus ord holding its content hash (star — corpus rows with
+          // that hash are already connected among themselves by the prior
+          // contentStar runs, enforced by the _meta_content_star stamp).
+          // The corpus scan is semi-filtered by a broadcast of the delta's
+          // DISTINCT hash set when small — gated on the distinct count
+          // (what is actually broadcast) with a cap sized for 32-byte
+          // hashes, not BandIndex's 12-byte band keys. Past it, plain
+          // shuffled join (the right plan for corpus-sized deltas).
+          val deltaHashes = deltaSig.select("content_hash").distinct()
+            .localCheckpoint() // one materialization: count + broadcast
+          val corpusSide0 = corpusSig.select(col("content_hash"), col("ord"))
+          val corpusSide =
+            if (deltaHashes.count() <= MaxContentHashBroadcast)
+              corpusSide0.join(broadcast(deltaHashes), Seq("content_hash"),
+                "left_semi")
+            else corpusSide0
+          val hubs = corpusSide.groupBy("content_hash").agg(min("ord").as("c_ord"))
+          val contentCross = deltaSig.select(col("content_hash"), col("ord"))
+            .join(hubs, "content_hash")
+            .select(least(col("ord"), col("c_ord")).as("a"),
+              greatest(col("ord"), col("c_ord")).as("b"), lit(0).as("dist"))
+          // delta-internal byte-identity star — the SAME construction the
+          // batch pipeline unions in (shared helper, so chained-equals-batch
+          // can't drift between the two call sites)
+          probed.unionByName(contentCross)
+            .unionByName(BandJoin.contentStarEdges(deltaSig))
+        }
+      withContent.groupBy("a", "b").agg(min("dist").as("dist"))
     })
 
     val oldComps = CorpusState.readComponents(spark, corpusWork, baseVer)
 
-    // delta-proportional CC input: only components that share a cross
-    // edge with the delta are re-labeled; everything else keeps its rows
-    val touched = cross.select(col("a").as("id"))
-      .unionByName(cross.select(col("b").as("id"))).distinct()
+    // delta-proportional CC input: only components that share an edge with
+    // the delta are re-labeled; everything else keeps its rows (delta ords
+    // are in no old component, so delta ↔ delta edges touch none)
+    val touched = edges.select(col("a").as("id"))
+      .unionByName(edges.select(col("b").as("id"))).distinct()
     val affectedComps = oldComps.join(touched, Seq("id")).select("comp").distinct()
     val affectedOld = oldComps.join(affectedComps, Seq("comp"), "left_semi")
     val starEdges = affectedOld.where(col("id") =!= col("comp"))
       .select(col("comp").as("a"), col("id").as("b"), lit(0).as("dist"))
 
-    val allEdges = cross.unionByName(internal).unionByName(starEdges)
     // the component PATCH: new labels for delta rows + affected old rows
-    val (patch, _) = ckpt.stage("components")(
-      ConnectedComponents.run(spark, allEdges))
+    val (patch, _, _) = ckpt.stage("components")(
+      ConnectedComponents.run(spark, edges.unionByName(starEdges)))
 
     // merged component view for the returned groups
     val comps =
@@ -553,16 +569,11 @@ object Incremental {
           .unionByName(patch)
       else patch
     // allowMissingColumns: a corpus whose signatures predate a Signature
-    // schema extension still merges (older columns null-fill)
-    val allSig = if (fullOutput)
-      corpusSig.unionByName(deltaSig, allowMissingColumns = true)
-    else {
-      val ids = comps.select(col("id").as("_member_id"))
-      corpusSig.unionByName(deltaSig, allowMissingColumns = true)
-        .join(ids, col("ord") === col("_member_id"), "left_semi")
-    }
+    // schema extension still merges (older columns null-fill). Groups'
+    // inner join on `comps` keeps only the rows `comps` names.
+    val allSig = corpusSig.unionByName(deltaSig, allowMissingColumns = true)
 
-    val (grouped, _) = ckpt.stage("groups")(registryPath match {
+    val (grouped, _, _) = ckpt.stage("groups")(registryPath match {
       case None => Groups.assemble(allSig, comps)
       case Some(regPath) =>
         // same S11/J7 semantics as the batch path: a merged group keeps
@@ -601,7 +612,8 @@ object Incremental {
     // covered rows.
     val coveredOrd = BandIndex.maxOrd(spark, indexPath)
     BandIndex.append(deltaSig.where(col("ord") > coveredOrd), indexPath,
-      segName = s"seg_delta_${deltaToken(deltaWork)}")
+      segName = s"seg_delta_${deltaToken(deltaWork)}",
+      numPartitions = BandIndex.appendPartitions(deltaRows))
 
     // periodic maintenance rides the ingest path: snapshot the merged
     // state, expire folded versions, and fold index segments. All three

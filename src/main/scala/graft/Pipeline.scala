@@ -128,7 +128,7 @@ object Pipeline {
     // with the opposite setting is refused instead of silently diverging
     CorpusState.stampFlag(spark, workDir, "content_star", contentStar.toString)
 
-    val (sig, sigHit) = ckpt.stage("signatures")(signatures(spark, images))
+    val (sig, sigHit, _) = ckpt.stage("signatures")(signatures(spark, images))
     if (!sigHit) {
       // one job: per-(fmt, decode_status) counts + the confident-row count
       // the auto chunk width needs. Totals derive from the same rows;
@@ -158,7 +158,7 @@ object Pipeline {
       .map(_.toLong)
       .getOrElse(sig.filter(col("has_pdq") && !col("low_conf")).count())
 
-    val (edges, edgesHit) = ckpt.stage("edges")({
+    val (edges, edgesHit, nEdges) = ckpt.stage("edges")({
       val hashEdges =
         if (algorithm == "phash")
           graft.lsh.BandJoin64.edges(sig, thr, phashChunkBits,
@@ -169,12 +169,13 @@ object Pipeline {
       else hashEdges.unionByName(BandJoin.contentStarEdges(sig))
         .groupBy("a", "b").agg(min("dist").as("dist"))
     })
-    if (!edgesHit) ckpt.appendMetric("comparisons", edges.count().toDouble)
+    // the stage already counted its rows from the written files' footers
+    if (!edgesHit) ckpt.appendMetric("comparisons", nEdges.toDouble)
 
-    val (comps, _) = ckpt.stage("components")(
+    val (comps, _, _) = ckpt.stage("components")(
       ConnectedComponents.run(spark, edges))
 
-    val (grouped, _) = ckpt.stage("groups")(registryPath match {
+    val (grouped, _, _) = ckpt.stage("groups")(registryPath match {
       case None => Groups.assemble(sig, comps)
       case Some(regPath) =>
         val assembled = Groups.assemble(sig, comps)

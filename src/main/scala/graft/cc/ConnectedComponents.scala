@@ -21,6 +21,25 @@ import org.apache.spark.sql.functions._
  * xxhash64 checksum — two cheap aggregates, no expensive EXCEPT).
  */
 object ConnectedComponents {
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Components at or above this size are logged loudly. Dup groups are
+    * small by construction (they only exist where near-dup edges exist),
+    * so a giant component means a misconfigured threshold or a degenerate
+    * corpus — the downstream group analytics still complete (they are
+    * groupBy-based, never a one-task-per-component window sort), but
+    * silently grinding through it would hide the misconfiguration. */
+  final val DefaultGiantWarnSize = 1000000L
+
+  /** How many of the largest giant components the guard names. */
+  private val MaxGiantsReported = 10
+
+  /** Labels plus execution stats: largeStar/smallStar rounds (0 on the
+    * driver path), the deduplicated input edge count, and the giant
+    * components as (comp, size), largest first, at most
+    * [[MaxGiantsReported]]. */
+  final case class Result(labels: DataFrame, rounds: Int, edgesIn: Long,
+                          giants: Seq[(Long, Long)])
 
   private def largeStar(e: DataFrame): DataFrame = {
     val sym = e.select(col("src"), col("dst"))
@@ -69,45 +88,74 @@ object ConnectedComponents {
    * Scale-adaptive: below DriverPathMaxEdges the exact union-find runs on
    * the driver (results identical — comp = min member either way); above
    * it the O(log n)-round large-star/small-star iteration takes over.
+   * Components of at least [[DefaultGiantWarnSize]] members are logged:
+   * free on the driver path, which holds every component, and one
+   * aggregate over the labels on the iterative path.
    */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 30,
           driverPathMaxEdges: Long = DriverPathMaxEdges): DataFrame =
-    runWithStats(spark, edges, maxIter, driverPathMaxEdges)._1
+    runDetailed(spark, edges, maxIter, driverPathMaxEdges).labels
 
-  /** Like [[run]], plus execution stats for benching/monitoring:
-    * (labels, largeStar/smallStar rounds used — 0 on the driver path —
-    * and the deduplicated input edge count). */
+  /** Like [[run]], plus (rounds, deduplicated input edge count) for
+    * benching/monitoring — see [[Result]]. */
   def runWithStats(spark: SparkSession, edges: DataFrame, maxIter: Int = 30,
                    driverPathMaxEdges: Long = DriverPathMaxEdges)
       : (DataFrame, Int, Long) = {
+    val r = runDetailed(spark, edges, maxIter, driverPathMaxEdges)
+    (r.labels, r.rounds, r.edgesIn)
+  }
+
+  /** [[run]] with every statistic, giant components included; the guard
+    * reports components of at least `giantWarnSize` members (0 disables
+    * it). */
+  def runDetailed(spark: SparkSession, edges: DataFrame, maxIter: Int = 30,
+                  driverPathMaxEdges: Long = DriverPathMaxEdges,
+                  giantWarnSize: Long = DefaultGiantWarnSize): Result = {
     var e = edges.select(col("a").as("src"), col("b").as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint()
     val nEdges = e.count()
-    if (nEdges <= driverPathMaxEdges)
-      return (driverUnionFind(spark, e), 0, nEdges)
-    var prev = checksum(e)
-    var i = 0
-    var converged = false
-    while (i < maxIter && !converged) {
-      e = smallStar(largeStar(e)).localCheckpoint()
-      val cur = checksum(e)
-      converged = cur == prev
-      prev = cur
-      i += 1
-    }
-    require(converged, s"connected components did not converge in $maxIter rounds")
-    // fixpoint edges are (node → component-min) stars; add the roots
-    val children = e.select(col("src").as("id"), col("dst").as("comp"))
-    val roots = e.select(col("dst").as("id"), col("dst").as("comp")).distinct()
-    (children.unionByName(roots)
-      .groupBy("id").agg(min("comp").as("comp")), i, nEdges)
+    val result =
+      if (nEdges <= driverPathMaxEdges) {
+        val (labels, giants) = driverUnionFind(spark, e, giantWarnSize)
+        Result(labels, 0, nEdges, giants)
+      } else {
+        var prev = checksum(e)
+        var i = 0
+        var converged = false
+        while (i < maxIter && !converged) {
+          e = smallStar(largeStar(e)).localCheckpoint()
+          val cur = checksum(e)
+          converged = cur == prev
+          prev = cur
+          i += 1
+        }
+        require(converged, s"connected components did not converge in $maxIter rounds")
+        // fixpoint edges are (node → component-min) stars; add the roots
+        val children = e.select(col("src").as("id"), col("dst").as("comp"))
+        val roots = e.select(col("dst").as("id"), col("dst").as("comp")).distinct()
+        val labels = children.unionByName(roots)
+          .groupBy("id").agg(min("comp").as("comp"))
+        val giants =
+          if (giantWarnSize <= 0) Seq.empty
+          else labels.groupBy("comp").agg(count(lit(1)).as("n"))
+            .where(col("n") >= giantWarnSize)
+            .orderBy(col("n").desc).limit(MaxGiantsReported).collect()
+            .map(r => (r.getLong(0), r.getLong(1))).toSeq
+        Result(labels, i, nEdges, giants)
+      }
+    if (result.giants.nonEmpty)
+      log.warn("giant components detected (threshold misconfiguration?): " +
+        result.giants.map { case (c, n) => s"comp=$c size=$n" }.mkString(", "))
+    result
   }
 
   /** Exact union-find with path halving (scanner.rs:1781-1807 port) over
-    * collected edges; comp canonicalized to the min member. */
-  private def driverUnionFind(spark: SparkSession, e: DataFrame): DataFrame = {
+    * collected edges; comp canonicalized to the min member. Also returns
+    * the components of at least `giantWarnSize` members (0 = none). */
+  private def driverUnionFind(spark: SparkSession, e: DataFrame,
+                              giantWarnSize: Long): (DataFrame, Seq[(Long, Long)]) = {
     import spark.implicits._
     val pairs = e.select(col("src"), col("dst")).as[(Long, Long)].collect()
     val parent = new java.util.HashMap[Long, Long]()
@@ -124,15 +172,16 @@ object ConnectedComponents {
       if (ra != rb) parent.put(ra, rb)
     }
     val nodes = parent.keySet().toArray(new Array[java.lang.Long](0)).map(_.longValue())
-    val byRoot = nodes.groupBy(find)
-    val out = byRoot.iterator.flatMap { case (_, members) =>
-      val mn = members.min
-      members.iterator.map(m => (m, mn))
-    }.toSeq
+    val comps = nodes.groupBy(find).values.map(members => (members.min, members)).toSeq
+    val giants =
+      if (giantWarnSize <= 0) Seq.empty
+      else comps.collect { case (mn, ms) if ms.length >= giantWarnSize => (mn, ms.length.toLong) }
+        .sortBy(-_._2).take(MaxGiantsReported)
+    val out = comps.flatMap { case (mn, members) => members.iterator.map(m => (m, mn)) }
     // round 6: no trailing repartition — createDataset already spreads the
     // rows over defaultParallelism slices, and the extra exchange was paid
     // by EVERY consumer of a driver-path CC result (guide §2.4: remove
     // shuffles outright)
-    spark.createDataset(out).toDF("id", "comp")
+    (spark.createDataset(out).toDF("id", "comp"), giants)
   }
 }

@@ -1,7 +1,16 @@
 package graft.ckpt
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.column.statistics.LongStatistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /**
  * Checkpointed, idempotently-resumable stage writer — the Iceberg-shaped
@@ -34,32 +43,29 @@ final class Ckpt(spark: SparkSession, workDir: String) {
   /** Run `compute` unless `stage` is already committed; always returns the
     * materialized frame (reads back from parquet so downstream plans start
     * from a stable scan, and `monotonically_increasing_id`-derived columns
-    * are frozen). Returns (frame, cacheHit). Lineage rows are buffered —
-    * call flush() once per run so the side-table writes cost one job, not
-    * one per stage. */
-  def stage(stageName: String)(compute: => DataFrame): (DataFrame, Boolean) = {
-    if (committed(stageName)) {
-      (spark.read.parquet(path(stageName)), true)
-    } else {
-      val t0 = System.nanoTime()
-      compute.write.mode(SaveMode.Overwrite).parquet(path(stageName))
-      val out = spark.read.parquet(path(stageName))
-      // per-file lineage in ONE zero-column job: row counts keyed by the
-      // WRITTEN file (input_file_name is stable across re-reads, unlike
-      // spark_partition_id which reflects the reader's split assignment),
-      // summed for the stage total — the per-partition replacement for the
-      // reference's per-file last_seen rows (db.rs:909-911). The projection
-      // is empty, so only parquet batch row counts are scanned, no columns.
-      val parts = out.groupBy(input_file_name().as("file"))
-        .agg(count(lit(1)).as("rows")).collect()
-      parts.foreach { r =>
-        val leaf = r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1)
-        pendingPartLineage += ((stageName, leaf, r.getLong(1)))
+    * are frozen). Returns (frame, cacheHit, rows). The read-back and the
+    * row count come from the part files' parquet footers on the driver
+    * ([[Ckpt.readCounted]]), so neither a fresh nor a resumed stage pays a
+    * schema-inference or counting job. Lineage rows are buffered — call
+    * flush() once per run so the side-table writes cost one job, not one
+    * per stage. */
+  def stage(stageName: String)(compute: => DataFrame): (DataFrame, Boolean, Long) = {
+    val hit = committed(stageName)
+    val t0 = System.nanoTime()
+    if (!hit) compute.write.mode(SaveMode.Overwrite).parquet(path(stageName))
+    val (out, files) = Ckpt.readCounted(spark, path(stageName))
+    val rows = files.map(_._2).sum
+    if (!hit) {
+      // per-file lineage keyed by the WRITTEN file, summed for the stage
+      // total — the per-partition replacement for the reference's per-file
+      // last_seen rows (db.rs:909-911). Empty part files (the schema-only
+      // file an empty partition 0 writes) carry no lineage row.
+      files.filter(_._2 > 0).foreach { case (leaf, n) =>
+        pendingPartLineage += ((stageName, leaf, n))
       }
-      appendLineage(stageName, parts.map(_.getLong(1)).sum,
-        (System.nanoTime() - t0) / 1000000)
-      (out, false)
+      appendLineage(stageName, rows, (System.nanoTime() - t0) / 1000000)
     }
+    (out, hit, rows)
   }
 
   def appendLineage(stageName: String, rows: Long, wallMs: Long): Unit =
@@ -124,4 +130,101 @@ final class Ckpt(spark: SparkSession, workDir: String) {
   def metrics: DataFrame = spark.read.parquet(s"$workDir/_metrics")
   def partitionLineage: DataFrame =
     spark.read.parquet(s"$workDir/_lineage_files")
+}
+
+/** Job-free reads of committed parquet directories. Spark's own
+  * `spark.read.parquet(dir)` runs a schema-inference job per read, and
+  * counting rows per file costs a scan; both facts sit in the part files'
+  * footers, which the driver reads directly. */
+object Ckpt {
+  /** Footer key under which Spark's parquet writer stores the row schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Footer-read parallelism — the bound Spark's own parallel footer
+    * reader uses. */
+  private val FooterThreads = 8
+
+  private def conf(spark: SparkSession): Configuration =
+    spark.sparkContext.hadoopConfiguration
+
+  /** Data files of a parquet dir (Spark's hidden-file rule: names starting
+    * with `_` or `.` are metadata or staging), sorted by name. */
+  private def partFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf(spark))
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+  }
+
+  private def footer(c: Configuration, f: FileStatus): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, c))
+    try r.getFooter finally r.close()
+  }
+
+  private def footers(spark: SparkSession, files: Seq[FileStatus]): Seq[ParquetMetadata] = {
+    val c = conf(spark)
+    if (files.size <= 1) files.map(footer(c, _))
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(FooterThreads, files.size))
+      try {
+        files.map(f => pool.submit(new java.util.concurrent.Callable[ParquetMetadata] {
+          def call(): ParquetMetadata = footer(c, f)
+        })).map { fut =>
+          try fut.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        }
+      } finally pool.shutdown()
+    }
+  }
+
+  /** The schema Spark recorded in a footer, if present and parseable. */
+  private def sparkSchema(m: ParquetMetadata): Option[StructType] =
+    Option(m.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+
+  private def load(spark: SparkSession, schema: Option[StructType],
+                   dirs: Seq[String]): DataFrame = schema match {
+    case Some(s) => spark.read.schema(s).parquet(dirs: _*)
+    case None => spark.read.parquet(dirs: _*) // no Spark schema key: infer
+  }
+
+  /** One scan over `dirs` (which must share a schema), with the schema taken
+    * from the first part file's footer instead of an inference job. */
+  def read(spark: SparkSession, dirs: String*): DataFrame = {
+    val first = dirs.iterator.flatMap(partFiles(spark, _)).take(1).toSeq
+    load(spark, footers(spark, first).headOption.flatMap(sparkSchema), dirs)
+  }
+
+  /** Max of long column `column` over a committed dir from the footers'
+    * row-group statistics — no Spark job. `ifEmpty` when the dir holds no
+    * rows; None when some row group carries no statistics for the column
+    * (the caller then scans). */
+  def longMax(spark: SparkSession, dir: String, column: String,
+              ifEmpty: Long): Option[Long] = {
+    val groups = footers(spark, partFiles(spark, dir)).flatMap(_.getBlocks.asScala)
+      .filter(_.getRowCount > 0)
+    val maxes = groups.map(_.getColumns.asScala.find(_.getPath.toDotString == column)
+      .map(_.getStatistics).collect {
+        case st: LongStatistics if st.hasNonNullValue => st.getMax
+      })
+    if (maxes.exists(_.isEmpty)) None
+    else Some(maxes.flatten.maxOption.getOrElse(ifEmpty))
+  }
+
+  /** Read one committed dir plus each part file's exact row count (leaf
+    * name → rows) from its footer — every footer read on the driver,
+    * [[FooterThreads]] at a time, no Spark job. */
+  def readCounted(spark: SparkSession, dir: String): (DataFrame, Seq[(String, Long)]) = {
+    val files = partFiles(spark, dir)
+    val ms = footers(spark, files)
+    val counts = files.zip(ms).map { case (f, m) =>
+      f.getPath.getName -> m.getBlocks.asScala.map(_.getRowCount).sum
+    }
+    (load(spark, ms.headOption.flatMap(sparkSchema), Seq(dir)), counts)
+  }
 }

@@ -1,5 +1,6 @@
 package graft.lsh
 
+import graft.ckpt.Ckpt
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -142,11 +143,13 @@ object BandIndex {
       .map(_.toString).sorted.toSeq
   }
 
-  /** The full index as a DataFrame (union of committed segments). */
+  /** The full index as a DataFrame: one scan over the committed segments
+    * (every segment shares the index's schema), its schema read from a
+    * parquet footer rather than inferred by a Spark job. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val segs = segments(spark, path)
     require(segs.nonEmpty, s"band index at $path has no committed segments")
-    spark.read.parquet(segs: _*)
+    Ckpt.read(spark, segs: _*)
   }
 
   /** 16-bit values keep the historical INT band_val column (a pre-r3
@@ -180,22 +183,29 @@ object BandIndex {
   // — a shuffle-free columnar read, but still O(corpus) per delta at 10⁹
   // images. Each committed segment now carries a `_segmax_<segName>`
   // sidecar holding its max ord (written right after the rename commits,
-  // derived from the pre-explode input in the same lineage), so the audit
-  // costs one directory listing plus tiny file reads — zero Spark jobs.
-  // Legacy segments self-heal: a missing sidecar triggers ONE single-
-  // segment single-column scan that backfills it. A crash between rename
-  // and sidecar write likewise just means one self-heal scan later — the
-  // sidecar is derived metadata, never load-bearing for correctness.
+  // read from the written files' footer statistics), so the audit costs
+  // one directory listing plus tiny file reads — zero Spark jobs.
+  // Legacy segments self-heal: a missing sidecar is derived once from the
+  // segment's footers and backfilled. A crash between rename and sidecar
+  // write likewise just means one self-heal later — the sidecar is
+  // derived metadata, never load-bearing for correctness.
 
   private def segMaxPath(path: String, segName: String) = s"$path/_segmax_$segName"
+
+  /** Max ord in a segment dir (-1 when empty): footer statistics, or one
+    * single-column scan when a row group carries none. */
+  private def maxOrdOfFiles(spark: SparkSession, dir: String): Long =
+    Ckpt.longMax(spark, dir, "ord", ifEmpty = -1L).getOrElse {
+      val r = spark.read.parquet(dir).agg(max("ord")).head()
+      if (r.isNullAt(0)) -1L else r.getLong(0)
+    }
 
   private def segMaxOrd(spark: SparkSession, path: String, segPath: String): Long = {
     val segName = new Path(segPath).getName
     readMeta(spark, segMaxPath(path, segName)) match {
       case Some(v) => v.toLong
-      case None => // legacy / crash-window segment — scan once, backfill
-        val r = spark.read.parquet(segPath).agg(max("ord")).head()
-        val mo = if (r.isNullAt(0)) -1L else r.getLong(0)
+      case None => // legacy / crash-window segment — derive once, backfill
+        val mo = maxOrdOfFiles(spark, segPath)
         writeMetaOnce(spark, segMaxPath(path, segName), mo.toString,
           s"max ord of $segName")
         mo
@@ -212,17 +222,12 @@ object BandIndex {
     val f = fs(spark, path)
     val finalP = new Path(path, segName)
     if (f.exists(finalP)) return // already committed
-    // segment rows = bandRows(sig) = has_pdq rows × chunks, so the
-    // segment's max ord is computable from the narrow pre-explode input
-    val mo = {
-      val r = sig.filter(col("has_pdq")).agg(max("ord")).head()
-      if (r.isNullAt(0)) -1L else r.getLong(0)
-    }
     val staging = new Path(path, s".tmp_$segName")
     bandRows(sig, chunkBitsOf(spark, path), algoOf(spark, path))
       .repartitionByRange(numPartitions, col("band_idx"), col("band_val"))
       .sortWithinPartitions("band_idx", "band_val")
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val mo = maxOrdOfFiles(spark, staging.toString)
     if (!f.rename(staging, finalP))
       throw new java.io.IOException(
         s"band index commit failed: rename $staging -> $finalP")
@@ -254,6 +259,18 @@ object BandIndex {
   def append(sig: DataFrame, path: String, segName: String = "seg_delta",
              numPartitions: Int = 32): Unit =
     writeSegment(sig, path, segName, numPartitions)
+
+  /** Signature rows per range partition of an appended segment: 64k rows
+    * explode to ~1M band rows at 16 chunks. */
+  final val AppendRowsPerPartition = 65536L
+
+  /** Range-partition count for appending `sigRows` signature rows: one
+    * partition per [[AppendRowsPerPartition]] rows, at most the build's 32.
+    * A small delta gets one partition, for which the range partitioner
+    * needs no sampling job. */
+  def appendPartitions(sigRows: Long): Int =
+    math.min(32L, math.max(1L,
+      (sigRows + AppendRowsPerPartition - 1) / AppendRowsPerPartition)).toInt
 
   /**
    * Compact all committed segments into one (the Iceberg rewrite-data-files
@@ -288,7 +305,7 @@ object BandIndex {
     val mo = all.map(s => segMaxOrd(spark, path, s)).max
     if (!f.exists(finalP)) {
       val staging = new Path(path, s".tmp_$segName")
-      spark.read.parquet(all: _*)
+      Ckpt.read(spark, all: _*)
         .dropDuplicates() // row-identical dups from a prior crash window
         .repartitionByRange(numPartitions, col("band_idx"), col("band_val"))
         .sortWithinPartitions("band_idx", "band_val")
@@ -391,6 +408,12 @@ object BandIndex {
    * per chunk, not the whole radius ball — scanner.rs:1579-1594 probes
    * low-quality hashes at limit 0).
    *
+   * `pending` rows are probed as if already appended: their radius-0 band
+   * rows are unioned with the committed segments. With `pending =
+   * deltaSig` one pass yields both delta ↔ index and delta ↔ delta edges;
+   * each delta ↔ delta pair then comes back in both directions, (a, b)
+   * and (b, a), each with its own probe direction's distance.
+   *
    * Index-side cost: when the probed key set is provably ≤
    * [[MaxKeyFilterRows]] AND below half the band-key space (so pruning
    * can actually bite), the exact key set is broadcast and the index is
@@ -400,7 +423,7 @@ object BandIndex {
    * Both gates are arithmetic from one delta-sized count.
    */
   def probe(spark: SparkSession, path: String, deltaSig: DataFrame,
-            threshold: Int): DataFrame = {
+            threshold: Int, pending: Option[DataFrame] = None): DataFrame = {
     require(threshold <= 63,
       s"similarity $threshold > 63 needs R=4 probing (scanner.rs:1649-1655)")
     val algo = algoOf(spark, path)
@@ -421,7 +444,9 @@ object BandIndex {
     val cAliases = hs.zipWithIndex.map { case (n, i) => col(n).as(s"c$i") }
     val cCols = hs.indices.map(i => col(s"c$i"))
     val vCols = hs.indices.map(i => col(s"v$i"))
-    val idx = read(spark, path)
+    val committed = read(spark, path)
+    val idx = pending.fold(committed)(p =>
+        committed.unionByName(bandRows(p, chunkBits, algo)))
       .select(col("band_idx") +: col("band_val") +: col("ord").as("c_ord") +:
         col("low_conf").as("c_low") +: cAliases: _*)
 

@@ -88,6 +88,9 @@ object BandJoin {
     * unbounded factor would trade one skew problem for explode volume. */
   final val MaxSaltFactor = 32
 
+  /** Largest salt factor a packed band key holds: salt gets 6 bits. */
+  final val PackedMaxSalt = 64
+
   /** Confident-row floor below which auto mode skips the occupancy
     * measurement entirely: with ≤ 2M rows no bucket can exceed 10× the
     * cap, AQE's partition-level skew split absorbs that comfortably
@@ -429,13 +432,15 @@ object BandJoin {
         chunksArrayB(_, chunkBits), rIdx)
 
     // Packed single-long join key (round 6, guide §2.3 narrower types):
-    // band_idx (< 32) ∙ band_val (< 2^chunkBits ≤ 2^32) ∙ salt (< 32 =
-    // MaxSaltFactor) fold into one non-overlapping long — one 8-byte key
-    // instead of three columns halves the shuffled key bytes and gives
-    // the shuffled-hash join a single-long lookup. Only at chunkBits ≤ 32
+    // band_idx (< 32) ∙ band_val (< 2^chunkBits ≤ 2^32) ∙ salt (6 bits,
+    // < 64) fold into one non-overlapping long — one 8-byte key instead of
+    // three columns halves the shuffled key bytes and gives the
+    // shuffled-hash join a single-long lookup. Only at chunkBits ≤ 32
     // (64-bit chunk values cannot pack); the 64-bit path keeps the
     // 3-column key.
     val packed = chunkBits <= 32
+    require(!packed || saltF <= PackedMaxSalt,
+      s"salt factor $saltF > $PackedMaxSalt would alias packed band keys")
     def packKey(idxC: Column, valC: Column, saltC: Column): Column =
       idxC.cast("long") * lit(1L << 38) + valC * lit(64L) + saltC
     val joinKeys = if (packed) Seq("bkey") else Seq("band_idx", "band_val", "salt")

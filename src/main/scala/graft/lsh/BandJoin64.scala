@@ -125,7 +125,9 @@ object BandJoin64 {
         hs => chunksArray64(hs.head, chunkBits), rIdx)
 
     // packed single-long join key (see BandJoin.bandMatches round-6 note):
-    // band_idx (< 8) ∙ band_val (< 2^chunkBits ≤ 2^32) ∙ salt (< 32)
+    // band_idx (< 8) ∙ band_val (< 2^chunkBits ≤ 2^32) ∙ salt (6 bits)
+    require(saltF <= BandJoin.PackedMaxSalt,
+      s"salt factor $saltF > ${BandJoin.PackedMaxSalt} would alias packed band keys")
     def packKey(idxC: Column, valC: Column, saltC: Column): Column =
       idxC.cast("long") * lit(1L << 38) + valC * lit(64L) + saltC
 

@@ -235,4 +235,35 @@ class BandIndexSpec extends AnyFunSuite {
     assert(avgSpan <= 4.0,
       f"files span $avgSpan%.1f of 16 band indexes on average — not range-clustered")
   }
+
+  test("probe(pending = d) == append(d) then probe, incl. low-confidence rows") {
+    import spark.implicits._
+    // force some low-confidence rows on both sides so the per-side exact
+    // limit is exercised among delta rows as well as against the corpus
+    def low(xs: Seq[graft.model.Signature]) =
+      xs.map(x => if (x.ord % 5 == 0) x.copy(low_conf = true) else x).toDS().toDF()
+    val (c, d) = (low(corpus), low(delta))
+    for ((algo, bits, thr) <- Seq((BandIndex.AlgoPdq, 16, Threshold),
+        (BandIndex.AlgoPhash64, graft.lsh.BandJoin64.BitsPerChunk,
+          graft.lsh.BandJoin64.DefaultThreshold))) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-bandindex-pend").toString
+      BandIndex.build(c, s"$dir/pending", chunkBits = bits, algo = algo)
+      BandIndex.build(c, s"$dir/appended", chunkBits = bits, algo = algo)
+      BandIndex.append(d, s"$dir/appended", "seg_delta_p")
+      def edges(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      val pend = edges(BandIndex.probe(spark, s"$dir/pending", d, thr, pending = Some(d)))
+      val app = edges(BandIndex.probe(spark, s"$dir/appended", d, thr))
+      assert(pend == app, s"$algo: only pending=${(pend -- app).take(5)} " +
+        s"only appended=${(app -- pend).take(5)}")
+      val deltaOrds = delta.map(_.ord).toSet
+      val lowOrds = (corpus ++ delta).filter(_.ord % 5 == 0).map(_.ord).toSet
+      val internal = pend.filter(e => deltaOrds(e._1) && deltaOrds(e._2))
+      assert(internal.nonEmpty, s"$algo: no delta ↔ delta pairs — fixture broken")
+      assert(pend.exists(e => lowOrds(e._1) || lowOrds(e._2)),
+        s"$algo: no low-confidence pair — the exact limit is untested")
+      assert(pend.filter(e => lowOrds(e._1) || lowOrds(e._2)).forall(_._3 == 0),
+        s"$algo: a low-confidence pair matched above distance 0")
+    }
+  }
 }

@@ -66,4 +66,18 @@ class CcSpec extends AnyFunSuite {
     val edges = (0L until 63L).map(i => (i, i + 1))
     check(64, edges)
   }
+
+  test("giant guard: components at or above the size are reported, largest first") {
+    import spark.implicits._
+    // stars of 30 (hub 0) and 12 (hub 100) members plus a pair
+    val edges = ((1L until 30L).map(i => (0L, i)) ++
+      (101L until 112L).map(i => (100L, i)) :+ ((200L, 201L))).toDF("a", "b")
+    for (cap <- Seq(0L, Long.MaxValue)) {
+      def giants(size: Long) = ConnectedComponents.runDetailed(spark, edges,
+        driverPathMaxEdges = cap, giantWarnSize = size).giants
+      assert(giants(12) == Seq((0L, 30L), (100L, 12L)), s"cap=$cap: ${giants(12)}")
+      assert(giants(13) == Seq((0L, 30L)), s"cap=$cap: ${giants(13)}")
+      assert(giants(31).isEmpty && giants(0).isEmpty, s"cap=$cap: guard misfired")
+    }
+  }
 }

@@ -347,4 +347,27 @@ class LshSpec extends AnyFunSuite {
     assert(!edges.exists(e => e == ((0L, 1L)) || e == ((1L, 2L))),
       "fuzzy match against low-conf rows must be rejected")
   }
+
+  test("packed band key: salt factor 64 accepted and recall-neutral, 65 refused") {
+    // the packed key gives the salt 6 bits; a larger explicit factor would
+    // alias neighbouring band values instead of failing
+    val r = new java.util.Random(23)
+    val base = randHash(r)
+    val sig = sigFrame(Seq(base, flipBits(base, r, 3), flipBits(base, r, 9)) ++
+      Seq.fill(150)(randHash(r)))
+    def es(s: Int) = BandJoin.edges(sig, 40, saltFactor = s).collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getInt(2))).toSet
+    assert(es(64) == es(1) && es(1).nonEmpty, "S=64 changed the edge set")
+    val err = intercept[IllegalArgumentException](es(65))
+    assert(err.getMessage.contains("alias"), err.getMessage)
+
+    val b64 = r.nextLong()
+    val sig64 = sigFrame64(Seq(b64, flipBits64(b64, r, 4), flipBits64(b64, r, 9)) ++
+      Seq.fill(150)(r.nextLong()))
+    def es64(s: Int) = graft.lsh.BandJoin64.edges(sig64, saltFactor = s).collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getInt(2))).toSet
+    assert(es64(64) == es64(1) && es64(1).nonEmpty, "u64 S=64 changed the edge set")
+    val err64 = intercept[IllegalArgumentException](es64(65))
+    assert(err64.getMessage.contains("alias"), err64.getMessage)
+  }
 }
