@@ -4,7 +4,7 @@ import graft.cc.ConnectedComponents
 import graft.ckpt.Ckpt
 import graft.groups.Groups
 import graft.kernel.SignatureKernel
-import graft.lsh.{BandIndex, BandJoin}
+import graft.lsh.{BandIndex, BandJoin, HashLayout}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -337,24 +337,30 @@ object Incremental {
       .take(8).map("%02x".format(_)).mkString
   }
 
-  /** When `fullOutput` (default), the returned frame re-assembles EVERY
+  /** Merge `deltaImages` into the corpus run at `corpusWork`, staging
+    * this delta's stages under `deltaWork`.
+    *
+    * When `fullOutput` (default), the returned frame re-assembles EVERY
     * group in corpus ∪ delta (the reference's report-everything UX, and
     * what the equivalence specs compare). At 10¹²-scale pass false to
     * assemble only the groups the delta touched — the state commit is
-    * identical either way. */
-  /** `compactEvery`: fold merge-on-read state + index segments into a
+    * identical either way.
+    *
+    * `compactEvery`: fold merge-on-read state + index segments into a
     * snapshot every K committed versions (0 disables). Keeps the layer
     * stack shallow in steady-state ingest without a manual maintenance
     * call — the 32-layer read-path warning never fires in normal
-    * operation (round-2 VERDICT #7). */
-  /** `algorithm` selects the hash the candidate probe bands on — "pdq"
+    * operation (round-2 VERDICT #7).
+    *
+    * `algorithm` selects the hash the candidate probe bands on — "pdq"
     * (256-bit, reference default) or "phash" (64-bit DCT pHash,
     * HammingHash<u64> semantics). The index is built algorithm-stamped
     * ([[BandIndex]] `_meta_algo`); probing a corpus whose index was built
     * for the other algorithm is refused (the band keys are incomparable).
     * `threshold` < 0 ⇒ the algorithm's own default (40 pdq / 15 phash),
-    * same contract as [[Pipeline.run]]. */
-  /** `contentStar`: the [[Pipeline.run]] opt-in flag's incremental
+    * same contract as [[Pipeline.run]].
+    *
+    * `contentStar`: the [[Pipeline.run]] opt-in flag's incremental
     * counterpart — byte-identical files (including UNDECODABLE ones)
     * group across the corpus/delta boundary via content-hash star edges.
     * Use the SAME setting across a chain as the batch run used: a corpus
@@ -367,17 +373,9 @@ object Incremental {
           compactEvery: Int = 8,
           algorithm: String = "pdq",
           contentStar: Boolean = false): DataFrame = {
-    require(algorithm == "pdq" || algorithm == "phash",
-      s"unknown algorithm '$algorithm' (pdq | phash)")
-    val thr =
-      if (threshold >= 0) threshold
-      else if (algorithm == "phash") graft.lsh.BandJoin64.DefaultThreshold
-      else Pipeline.DefaultThreshold
-    require(algorithm != "phash" || thr <= graft.lsh.BandJoin64.DefaultThreshold,
-      s"phash threshold $thr > ${graft.lsh.BandJoin64.DefaultThreshold} " +
-        "(MAX_SIMILARITY_64, hamminghash.rs:5)")
-    val indexAlgo =
-      if (algorithm == "phash") BandIndex.AlgoPhash64 else BandIndex.AlgoPdq
+    val layout = HashLayout.forAlgorithm(algorithm)
+    val thr = layout.runThreshold(threshold)
+    val indexAlgo = layout.tag
     // record the chain's operating-threshold high-water mark so index
     // maintenance can never widen past what this chain actually probes at
     // (a 32-bit index cannot serve thresholds > 31; MaintenanceCli gates

@@ -4,7 +4,7 @@ import graft.cc.ConnectedComponents
 import graft.ckpt.Ckpt
 import graft.groups.Groups
 import graft.kernel.SignatureKernel
-import graft.lsh.BandJoin
+import graft.lsh.{BandJoin, HashLayout}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,9 +24,7 @@ import org.apache.spark.sql.functions._
  * scanner.rs:1251-1294).
  */
 object Pipeline {
-  final val DefaultThreshold = 40 // phdupes.rs:353-355
-
-  private val warmedUp = new java.util.concurrent.atomic.AtomicBoolean(false)
+  final val DefaultThreshold: Int = HashLayout.Pdq.defaultThreshold
 
   def session(master: String, shufflePartitions: Int = 32): SparkSession = {
     // shuffle through RAM, not container disk: local[N] is the stand-in for
@@ -37,7 +35,7 @@ object Pipeline {
       if (shmBase.isDirectory && shmBase.canWrite) "/dev/shm/graft-spark-local"
       else s"${sys.props("java.io.tmpdir")}/graft-spark-local"
     new java.io.File(localDir).mkdirs()
-    val s = SparkSession.builder()
+    SparkSession.builder()
       .master(master)
       .appName("graft-dedup")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -48,26 +46,6 @@ object Pipeline {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // Once-per-JVM warm-up (round 6, guide §1: measure the computation,
-    // not class loading): the first job of a fresh JVM pays Janino/WSCG
-    // compiler init, shuffle + AQE machinery, and parquet reader/writer
-    // class loading — ~5-8 s billed to whichever query happens to run
-    // first. One tiny shuffle job plus a 10-row parquet round-trip loads
-    // all of it up front, on synthetic rows (no input data touched, no
-    // results retained — this is JVM warm-up, not caching).
-    if (warmedUp.compareAndSet(false, true)) {
-      try {
-        s.range(0, 1000)
-          .groupBy((org.apache.spark.sql.functions.col("id") % 10).as("k"))
-          .count().orderBy("k").collect()
-        val f = java.nio.file.Files.createTempDirectory("graft-warmup")
-        val p = s"$f/warm.parquet"
-        s.range(0, 10).write.mode("overwrite").parquet(p)
-        s.read.parquet(p).count()
-        new scala.reflect.io.Directory(f.toFile).deleteRecursively()
-      } catch { case scala.util.control.NonFatal(_) => }
-    }
-    s
   }
 
   /** Compute signatures with a frozen dense ord. The image_id dedup
@@ -81,47 +59,42 @@ object Pipeline {
       .dropDuplicates("image_id")
       .withColumn("ord", monotonically_increasing_id())
 
-  /** Full run. Returns the per-member groups frame. When `registryPath`
-    * is set, groups get cross-run-stable UUIDs (S11/J7 semantics) and the
-    * registry table is merged back. */
-  /** `chunkBits` selects the MIH chunk width (16 = reference parity;
-    * 32 = the ≥10⁹-image configuration — SCALING.md cost model).
-    * `algorithm` selects the hash the candidate join bands on: "pdq"
-    * (256-bit, the reference default) or "phash" (64-bit DCT pHash via
-    * [[graft.lsh.BandJoin64]], HammingHash<u64> semantics — pass a
-    * threshold ≤ 15, hamminghash.rs:5). */
-  /** `phashChunkBits`: 8 = reference parity (hamminghash.rs:39-41), 16 =
-    * the n≥10⁶ setting (identical edges, ~10× less collision volume —
-    * measured in MillionBench phash vs phash16).
+  /** Full run. Returns the per-member groups frame.
+    *
+    * `algorithm` selects the hash the candidate join bands on, through its
+    * [[graft.lsh.HashLayout]]: "pdq" (256-bit, the reference default) or
+    * "phash" (64-bit DCT pHash, HammingHash<u64> semantics).
+    *
+    * `threshold` < 0 ⇒ the algorithm's own default: 40 for pdq
+    * (phdupes.rs:353-355), 15 for phash (MAX_SIMILARITY_64,
+    * hamminghash.rs:5). A phash threshold above 15 is refused outright —
+    * over 64-bit hashes E[dist] of a random pair is 32, so the PDQ default
+    * 40 would match ~97% of random pairs and collapse the corpus into one
+    * giant component (the reference enforces the same cap).
+    *
+    * `chunkBits` selects the MIH chunk width for the chosen algorithm;
+    * 0 auto-selects it from the confident-row count. pdq: 16 = reference
+    * parity, 32 = the ≥10⁹-image configuration (SCALING.md cost model).
+    * phash: 8 = reference parity (hamminghash.rs:39-41), 16 = the n≥10⁶
+    * setting (identical edges, ~10× less collision volume — measured in
+    * MillionBench phash vs phash16).
+    *
+    * When `registryPath` is set, groups get cross-run-stable UUIDs
+    * (S11/J7 semantics) and the registry table is merged back.
     *
     * `contentStar`: OFF by default for reference parity (the reference
     * skips hash-less files entirely, scanner.rs:1659-1663); ON adds
     * linear star edges on byte-identical `content_hash`, so exact copies
     * of UNDECODABLE files (a corrupt JPEG uploaded twice, a JXL slice
     * with no codec) still dedup — what a training-data pipeline wants. */
-  /** `threshold` < 0 ⇒ the algorithm's own default: 40 for pdq
-    * (phdupes.rs:353-355), 15 for phash (MAX_SIMILARITY_64,
-    * hamminghash.rs:5). A phash threshold above 15 is refused outright —
-    * over 64-bit hashes E[dist] of a random pair is 32, so the PDQ default
-    * 40 would match ~97% of random pairs and collapse the corpus into one
-    * giant component (the reference enforces the same cap). */
   def run(spark: SparkSession, images: DataFrame, workDir: String,
           threshold: Int = -1,
           registryPath: Option[String] = None,
           chunkBits: Int = 0,
           algorithm: String = "pdq",
-          phashChunkBits: Int = 0,
           contentStar: Boolean = false): DataFrame = {
-    require(algorithm == "pdq" || algorithm == "phash",
-      s"unknown algorithm '$algorithm' (pdq | phash)")
-    val thr =
-      if (threshold >= 0) threshold
-      else if (algorithm == "phash") graft.lsh.BandJoin64.DefaultThreshold
-      else DefaultThreshold
-    require(algorithm != "phash" || thr <= graft.lsh.BandJoin64.DefaultThreshold,
-      s"phash threshold $thr > ${graft.lsh.BandJoin64.DefaultThreshold} " +
-        "(MAX_SIMILARITY_64, hamminghash.rs:5) — over 64-bit hashes a " +
-        "higher cap matches most random pairs")
+    val layout = HashLayout.forAlgorithm(algorithm)
+    val thr = layout.runThreshold(threshold)
     val ckpt = new Ckpt(spark, workDir)
     // grouping semantics are a property of the corpus chain: stamp the
     // content-star flag write-once so a later (batch or incremental) run
@@ -159,12 +132,8 @@ object Pipeline {
       .getOrElse(sig.filter(col("has_pdq") && !col("low_conf")).count())
 
     val (edges, edgesHit, nEdges) = ckpt.stage("edges")({
-      val hashEdges =
-        if (algorithm == "phash")
-          graft.lsh.BandJoin64.edges(sig, thr, phashChunkBits,
-            nConfHint = confidentRows)
-        else BandJoin.edges(sig, thr, chunkBits = chunkBits,
-          nConfHint = confidentRows)
+      val hashEdges = BandJoin.edges(sig, thr, chunkBits = chunkBits,
+        nConfHint = confidentRows, layout = layout)
       if (!contentStar) hashEdges
       else hashEdges.unionByName(BandJoin.contentStarEdges(sig))
         .groupBy("a", "b").agg(min("dist").as("dist"))

@@ -43,13 +43,12 @@ import org.apache.spark.sql.functions._
  * no-op once the segment exists, so appends are exactly-once without any
  * side marker.
  *
- * TWO HASH ALGORITHMS (round 4): an index is built for either the 256-bit
- * PDQ hash (h0..h3, chunk widths 16/32) or the 64-bit DCT pHash
- * (`phash64`, widths 8/16 — HammingHash<u64> semantics,
- * hamminghash.rs:23-41). The algorithm is frozen into `_meta` at build
- * alongside the chunk width; probes verify with the matching Hamming
- * distance and expand the matching variant column (`variants` /
- * `phash_variants` — store-1/query-8 either way).
+ * TWO HASH ALGORITHMS (round 4): an index is built for either
+ * [[HashLayout]] — the 256-bit PDQ hash (h0..h3, chunk widths 16/32) or the
+ * 64-bit DCT pHash (`phash64`, widths 8/16 — HammingHash<u64> semantics,
+ * hamminghash.rs:23-41). The layout's tag is frozen into `_meta_algo` at
+ * build alongside the chunk width; probes read the layout back from it for
+ * the hash columns, variant column and Hamming verify.
  *
  * Semantics match the full-join path including the low-quality gate
  * (scanner.rs:1579-1594): low-confidence rows are indexed and probed at
@@ -58,8 +57,8 @@ import org.apache.spark.sql.functions._
  */
 object BandIndex {
   final val BaseSegment = "seg_base"
-  final val AlgoPdq = "pdq"
-  final val AlgoPhash64 = "phash64"
+  final val AlgoPdq: String = HashLayout.Pdq.tag
+  final val AlgoPhash64: String = HashLayout.Phash64.tag
 
   /** Broadcast-key-prefilter cap: the probed (band_idx, band_val) set is
     * broadcast for an index semi-join only below this many keys (~24 MB of
@@ -117,15 +116,12 @@ object BandIndex {
   /** Chunk width this index was built with (16 when the marker predates
     * the knob — every pre-round-3 index is 16-bit PDQ). */
   def chunkBitsOf(spark: SparkSession, path: String): Int =
-    readMeta(spark, metaPath(path)).map(_.toInt).getOrElse(BandJoin.BitsPerChunk)
+    readMeta(spark, metaPath(path)).map(_.toInt).getOrElse(HashLayout.Pdq.parityBits)
 
   /** Hash algorithm this index was built for ([[AlgoPdq]] when the marker
     * predates the knob — pre-round-4 indexes are all PDQ). */
   def algoOf(spark: SparkSession, path: String): String =
     readMeta(spark, algoPath(path)).getOrElse(AlgoPdq)
-
-  private def hashBits(algo: String): Int =
-    if (algo == AlgoPhash64) 64 else 256
 
   /** True when the index has at least one committed segment. */
   def exists(spark: SparkSession, path: String): Boolean = {
@@ -158,22 +154,14 @@ object BandIndex {
   private def bandValTyped(c: Column, chunkBits: Int) =
     if (chunkBits <= 16) c.cast("int") else c
 
-  /** The per-algorithm hash payload columns carried beside each band key
+  /** Radius-0 band rows, carrying the hash longs beside each band key
     * (what the in-join Hamming verify needs). */
-  private def hashCols(algo: String): Seq[String] =
-    if (algo == AlgoPhash64) Seq("phash64") else Seq("h0", "h1", "h2", "h3")
-
-  private def chunksOf(algo: String, hs: Seq[Column], chunkBits: Int): Column =
-    if (algo == AlgoPhash64) BandJoin64.chunksArray64(hs.head, chunkBits)
-    else BandJoin.chunksArrayB(hs, chunkBits)
-
-  private def bandRows(sig: DataFrame, chunkBits: Int, algo: String): DataFrame = {
-    val hs = hashCols(algo)
+  private def bandRows(sig: DataFrame, chunkBits: Int, layout: HashLayout): DataFrame = {
+    val hs = layout.hashCols.map(col)
     sig.filter(col("has_pdq"))
-      .select(col("ord") +: col("low_conf") +: hs.map(col): _*)
+      .select(col("ord") +: col("low_conf") +: hs: _*)
       .select(col("*"),
-        posexplode(chunksOf(algo, hs.map(col), chunkBits))
-          .as(Seq("band_idx", "band_val")))
+        posexplode(BandJoin.chunksArrayB(hs, chunkBits)).as(Seq("band_idx", "band_val")))
       .withColumn("band_val", bandValTyped(col("band_val"), chunkBits))
   }
 
@@ -223,7 +211,7 @@ object BandIndex {
     val finalP = new Path(path, segName)
     if (f.exists(finalP)) return // already committed
     val staging = new Path(path, s".tmp_$segName")
-    bandRows(sig, chunkBitsOf(spark, path), algoOf(spark, path))
+    bandRows(sig, chunkBitsOf(spark, path), HashLayout.forTag(algoOf(spark, path)))
       .repartitionByRange(numPartitions, col("band_idx"), col("band_val"))
       .sortWithinPartitions("band_idx", "band_val")
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
@@ -241,10 +229,9 @@ object BandIndex {
     * reference parity, 16 = the ≥10⁵-row build). `algo` selects the hash
     * the index bands on and is frozen alongside. */
   def build(sig: DataFrame, path: String, numPartitions: Int = 32,
-            chunkBits: Int = BandJoin.BitsPerChunk,
+            chunkBits: Int = HashLayout.Pdq.parityBits,
             algo: String = AlgoPdq): Unit = {
-    require(algo == AlgoPdq || algo == AlgoPhash64,
-      s"unknown band index algorithm '$algo' ($AlgoPdq | $AlgoPhash64)")
+    HashLayout.forTag(algo) // refuses an unknown algorithm before any write
     val spark = sig.sparkSession
     fs(spark, path).mkdirs(new Path(path))
     writeMetaOnce(spark, algoPath(path), algo, "algorithm")
@@ -337,18 +324,16 @@ object BandIndex {
     * build and [[maybeWiden]]): wide only when the corpus is past the
     * parity width's degeneracy cutoff AND the probe ball still fits the
     * mask cap at the operating threshold — the index stores radius-0
-    * keys, so the whole ball is probe-side. Cutoffs are parameters so
-    * tests can cross them with small corpora. */
+    * keys, so the whole ball is probe-side. The cutoff is a parameter so
+    * tests can cross it with small corpora (< 0 ⇒ the layout's own). */
   def autoBuildBits(algo: String, nConf: Long, threshold: Int,
-                    wideCutoff: Long = BandJoin.AutoWideCutoff,
-                    wideCutoff64: Long = BandJoin64.AutoWideCutoff): Int =
-    if (algo == AlgoPhash64) {
-      val w = if (nConf <= wideCutoff64) BandJoin64.BitsPerChunk else 16
-      if (BandJoin.maskCount(threshold / (64 / w), w) <= BandJoin.MaxMasksPerSide) w
-      else BandJoin64.BitsPerChunk
-    } else if (nConf > wideCutoff &&
-      BandJoin.maskCount(threshold / 8, 32) <= BandJoin.MaxMasksPerSide) 32
-    else BandJoin.BitsPerChunk
+                    wideCutoff: Long = -1L): Int = {
+    val layout = HashLayout.forTag(algo)
+    val w = layout.autoChunkBits(nConf,
+      if (wideCutoff >= 0) wideCutoff else layout.wideCutoff)
+    if (BandJoin.maskCount(threshold / (layout.bits / w), w) <= BandJoin.MaxMasksPerSide) w
+    else layout.parityBits
+  }
 
   /** Rebuild this index at `newBits` from the corpus signatures — an
     * explicit O(corpus) maintenance operation. Protocol: build a complete
@@ -384,13 +369,11 @@ object BandIndex {
     * rebuild happened. */
   def maybeWiden(spark: SparkSession, path: String, sig: DataFrame,
                  threshold: Int,
-                 wideCutoff: Long = BandJoin.AutoWideCutoff,
-                 wideCutoff64: Long = BandJoin64.AutoWideCutoff,
+                 wideCutoff: Long = -1L,
                  numPartitions: Int = 32): Option[Int] = {
     val cur = chunkBitsOf(spark, path)
     val nConf = sig.filter(col("has_pdq") && !col("low_conf")).count()
-    val want = autoBuildBits(algoOf(spark, path), nConf, threshold,
-      wideCutoff, wideCutoff64)
+    val want = autoBuildBits(algoOf(spark, path), nConf, threshold, wideCutoff)
     if (want > cur) {
       log.info(s"widening band index $path: $cur-bit -> $want-bit chunks " +
         s"($nConf confident rows past the cutoff)")
@@ -424,12 +407,10 @@ object BandIndex {
    */
   def probe(spark: SparkSession, path: String, deltaSig: DataFrame,
             threshold: Int, pending: Option[DataFrame] = None): DataFrame = {
-    require(threshold <= 63,
-      s"similarity $threshold > 63 needs R=4 probing (scanner.rs:1649-1655)")
-    val algo = algoOf(spark, path)
+    val layout = HashLayout.forTag(algoOf(spark, path))
     val chunkBits = chunkBitsOf(spark, path)
-    val numChunks = hashBits(algo) / chunkBits
-    val tol = threshold / numChunks
+    val numChunks = layout.bits / chunkBits
+    val tol = layout.tolerance(threshold, chunkBits)
     // the index side is radius-0, so the whole probe ball sits on the
     // delta — feasibility is arithmetic-checked BEFORE any mask array
     // materializes (at 32-bit chunks this limits threshold ≤ 31:
@@ -440,25 +421,17 @@ object BandIndex {
         s"(> ${BandJoin.MaxMasksPerSide}) — rebuild the index with " +
         "narrower chunks or lower the threshold")
 
-    val hs = hashCols(algo)
-    val cAliases = hs.zipWithIndex.map { case (n, i) => col(n).as(s"c$i") }
-    val cCols = hs.indices.map(i => col(s"c$i"))
-    val vCols = hs.indices.map(i => col(s"v$i"))
+    val cCols = layout.names("c").map(col)
+    val vCols = layout.names("v").map(col)
     val committed = read(spark, path)
     val idx = pending.fold(committed)(p =>
-        committed.unionByName(bandRows(p, chunkBits, algo)))
+        committed.unionByName(bandRows(p, chunkBits, layout)))
       .select(col("band_idx") +: col("band_val") +: col("ord").as("c_ord") +:
-        col("low_conf").as("c_low") +: cAliases: _*)
+        col("low_conf").as("c_low") +: layout.hashAs("c"): _*)
 
     val delta = deltaSig.filter(col("has_pdq"))
-    val variantsCol = if (algo == AlgoPhash64) "phash_variants" else "variants"
-    val vFields: Seq[Column] =
-      if (algo == AlgoPhash64) Seq(col("v").as("v0"))
-      else hs.indices.map(i => col("v").getItem(i).as(s"v$i"))
-    val prbBase = delta
-      .select(col("ord"), col("low_conf").as("q_low"),
-        explode(col(variantsCol)).as("v"))
-      .select(col("ord") +: col("q_low") +: vFields: _*)
+    val prbBase = layout.explodeVariants(delta, col(layout.variantsCol),
+      layout.names("v"), col("ord"), col("low_conf").as("q_low"))
 
     // F2 split (scanner.rs:1579-1594): confident rows expand the full
     // radius-tol ball; low-confidence rows match exact-only, so they probe
@@ -466,7 +439,7 @@ object BandIndex {
     // exploded keys that the dist ≤ 0 filter would discard anyway
     def expand(base: DataFrame, radius: Int): DataFrame = base
       .select(col("*"),
-        posexplode(chunksOf(algo, vCols, chunkBits)).as(Seq("band_idx", "chunk")))
+        posexplode(BandJoin.chunksArrayB(vCols, chunkBits)).as(Seq("band_idx", "chunk")))
       .withColumn("mask", explode(lit(BandJoin.masksB(radius, chunkBits))))
       .withColumn("band_val",
         bandValTyped(col("chunk").bitwiseXOR(col("mask")), chunkBits))
@@ -508,13 +481,10 @@ object BandIndex {
         idx
       }
 
-    val verify =
-      if (algo == AlgoPhash64) BandJoin64.hamming64(vCols.head, cCols.head)
-      else BandJoin.hammingCols(vCols, cCols)
     // per-side limit: either side low-confidence ⇒ exact only (F2)
     prb.hint("shuffle_hash").join(idxSide, Seq("band_idx", "band_val"))
       .where(col("q_ord") =!= col("c_ord"))
-      .withColumn("dist", verify)
+      .withColumn("dist", BandJoin.hammingCols(vCols, cCols))
       .where(col("dist") <=
         when(col("q_low") || col("c_low"), lit(0)).otherwise(lit(threshold)))
       .groupBy(col("q_ord").as("a"), col("c_ord").as("b"))

@@ -7,67 +7,41 @@ import org.apache.spark.sql.functions._
 /**
  * LSH-banded candidate generation + Hamming verification — the Spark-native
  * re-expression of the reference's Multi-Index-Hashing probe
- * (hamminghash.rs:82-149 index, scanner.rs:1640-1776 probe loop).
+ * (hamminghash.rs:82-149 index, scanner.rs:1640-1776 probe loop), written
+ * once over a [[HashLayout]]: 256-bit PDQ (the default) or the 64-bit pHash.
  *
- * Shape: the CSR inverted index becomes an `explode` of the 16 little-endian
- * u16 chunks of the 256-bit hash into (band_idx, band_val) keys; the
- * pigeonhole multi-probe (R-bit flips of the queried chunk) becomes a second
+ * Shape: the CSR inverted index becomes an `explode` of the hash's
+ * little-endian chunks into (band_idx, band_val) keys; the pigeonhole
+ * multi-probe (R-bit flips of the queried chunk) becomes a second
  * `explode` over XOR masks; candidate generation is a self equi-join on the
  * band key; verification is a pure-Catalyst `bit_count(xor)` residual over
- * the hash carried as 4 longs — the whole verify filter stays inside
+ * the hash carried as longs — the whole verify filter stays inside
  * whole-stage codegen.
  *
  * Scale notes (the parts the single-process reference never needed):
  *  - The probe radius is SPLIT between the two join sides: covering chunk
  *    distance `tol` needs radius-r_i flips on the index side and r_p on the
- *    probe side with r_i + r_p = tol (triangle inequality over the 16-bit
- *    chunk). Probe-side-only (the reference's choice, free in RAM) would
- *    shuffle 1+16+120=137 keys/chunk at tol=2; the (1,1) split shuffles
- *    17 keys/chunk on each side — ~7× less exploded volume with identical
- *    recall.
+ *    probe side with r_i + r_p = tol (triangle inequality over the
+ *    chunk). See [[radiusSplit]].
  *  - Low-quality (quality<50) hashes are exact-match-only
  *    (scanner.rs:1579-1594). They are excluded from the fuzzy join entirely
  *    and handled by a linear-cost star join on exact hash equality — this
  *    removes the worst skew source (near-flat images collapse onto a few
- *    band values) *before* the shuffle instead of salting it after.
+ *    band values) *before* the shuffle instead of salting it after. PDQ
+ *    quality is the featurelessness signal of the image whichever hash is
+ *    banded, so the gate applies to the pHash layout too.
  *  - Exact (distance-0) matching builds STAR edges per identical hash via
  *    groupBy + min instead of pairwise edges: a cluster of k byte-identical
  *    images costs k edges, not k²/2, with the same connected components.
  *  - AQE skew-join splitting is enabled session-wide for the residual skew.
  */
 object BandJoin {
-  final val NumChunks = 16
-  final val BitsPerChunk = 16
-
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Confident-row count above which 16-bit chunks degenerate: E[bucket] =
-    * n/2¹⁶, so expected collision volume grows as n²/2¹⁶ per chunk — at
-    * n=10⁷ that is ~10¹⁰ rows before the verify filter. Past this, auto
-    * width switches to 32-bit chunks (the SCALING.md configuration:
-    * Norouzi m ≈ 256/log₂n, CVPR'12). */
-  final val AutoWideCutoff = 10000000L
-
-  /** MIH chunk width from corpus size — used when callers pass
-    * `chunkBits = 0` (auto). 16 = reference parity, right up to ~10⁷
-    * confident rows; 32 = the ≥10⁷ setting (identical edge set by
-    * pigeonhole, proven by LshSpec width-equality). */
-  def autoChunkBits(n: Long): Int = if (n <= AutoWideCutoff) BitsPerChunk else 32
-
-  /** Confident-row count for the auto knobs (width + salt): the caller's
-    * hint when it already paid for the count (Pipeline reads it back from
-    * the signatures stage metrics — round-3 VERDICT #8), else ONE count
-    * job shared by both knobs. -1 when neither knob needs it. */
-  private def resolveConfCount(conf: DataFrame, nConfHint: Long,
-                               needed: Boolean): Long =
-    if (nConfHint >= 0) nConfHint
-    else if (needed) conf.count()
-    else -1L
 
   /** XOR masks within Hamming radius r of a 16-bit value (r ∈ 0..2 used;
     * r=3 supported for threshold 48..63, scanner.rs:1755-1767). */
   def masks(radius: Int): Array[Int] =
-    masksB(radius, BitsPerChunk).map(_.toInt)
+    masksB(radius, 16).map(_.toInt)
 
   /** Hard cap on XOR masks materialized per explode side: the masks become
     * a `lit` array in the plan, so an unbounded radius×width combination
@@ -107,8 +81,19 @@ object BandJoin {
     * the conservative upper bound is used instead. */
   final val BallAggBudget = 256000000L
 
+  /** Ceiling on the TARGETED-salt hot-key set: past it (≤ n·numChunks/cap
+    * keys can exceed the cap, so ~10⁸ rows at 16-bit) the InSet literal
+    * stops being cheap to ship per task and global salting takes over. */
+  final val MaxHotKeys = 100000
+
+  /** Combined (band_idx, band_val) key for hot-key membership tests —
+    * collision-free while band_val < 2³², i.e. chunkBits ≤ 32. */
+  private def combinedKey(idx: Column, value: Column): Column =
+    idx.cast("long") * lit(1L << 32) + value
+
   /** AUTO salt factor (`saltFactor = 0`): top JOIN-KEY bucket occupancy
-    * over the confident rows, divided by [[SaltBucketCap]].
+    * over the confident rows (hash longs `hs`), divided by
+    * [[SaltBucketCap]].
     *
     * The index side builds keys at radius `rIdx`, so the bucket the join
     * task actually sees at key (i, v) holds every row whose chunk lies in
@@ -124,22 +109,10 @@ object BandJoin {
     * for the measurement. Falls back to the conservative upper bound
     * max₀·|B(rIdx)| (over-salting is recall-neutral) if the occupancy
     * table itself is too wide for the budget. */
-  /** Ceiling on the TARGETED-salt hot-key set: past it (≤ n·numChunks/cap
-    * keys can exceed the cap, so ~10⁸ rows at 16-bit) the InSet literal
-    * stops being cheap to ship per task and global salting takes over. */
-  final val MaxHotKeys = 100000
-
-  /** Combined (band_idx, band_val) key for hot-key membership tests —
-    * collision-free while band_val < 2³², i.e. chunkBits ≤ 32. */
-  private def combinedKey(idx: Column, value: Column): Column =
-    idx.cast("long") * lit(1L << 32) + value
-
   private[graft] def autoSaltFactor(conf: DataFrame, hs: Seq[String],
-                                    chunkBits: Int,
-                                    chunks: Seq[Column] => Column,
-                                    rIdx: Int = 0,
+                                    chunkBits: Int, rIdx: Int = 0,
                                     cap: Long = SaltBucketCap): Int =
-    autoSalt(conf, hs, chunkBits, chunks, rIdx, cap)._1
+    autoSalt(conf, hs, chunkBits, rIdx, cap)._1
 
   /** AUTO salt decision: (factor, hot-key set). The key set — join keys
     * whose ball occupancy exceeds the cap — enables TARGETED salting:
@@ -148,12 +121,11 @@ object BandJoin {
     * corpus. None ⇒ salt globally (set too large to ship, conservative
     * fallback path, or 64-bit chunks where keys can't be combined). */
   private[graft] def autoSalt(conf: DataFrame, hs: Seq[String],
-                              chunkBits: Int,
-                              chunks: Seq[Column] => Column,
-                              rIdx: Int = 0,
+                              chunkBits: Int, rIdx: Int = 0,
                               cap: Long = SaltBucketCap): (Int, Option[Array[Long]]) = {
     val occ0 = conf
-      .select(posexplode(chunks(hs.map(col))).as(Seq("band_idx", "band_val")))
+      .select(posexplode(chunksArrayB(hs.map(col), chunkBits))
+        .as(Seq("band_idx", "band_val")))
       .groupBy("band_idx", "band_val").agg(count(lit(1)).as("n"))
     val mc = maskCount(rIdx, chunkBits)
     def headMax(df: DataFrame): Long = {
@@ -217,8 +189,8 @@ object BandJoin {
 
   /** Index-side salt column: pmod(ord, S) on hot keys (or everywhere
     * when `hotKeys` is None), 0 elsewhere. */
-  private[lsh] def saltIndexCol(saltF: Int, hotKeys: Option[Array[Long]],
-                                ord: Column): Column = hotKeys match {
+  private def saltIndexCol(saltF: Int, hotKeys: Option[Array[Long]],
+                           ord: Column): Column = hotKeys match {
     case Some(ks) =>
       when(combinedKey(col("band_idx"), col("band_val")).isin(ks.map(Long.box): _*),
         pmod(ord, lit(saltF))).otherwise(lit(0)).cast("int")
@@ -227,7 +199,7 @@ object BandJoin {
 
   /** Probe-side salt values to explode: all S on hot keys (or everywhere
     * when `hotKeys` is None), the single 0 elsewhere. */
-  private[lsh] def saltProbeCol(saltF: Int, hotKeys: Option[Array[Long]]): Column = {
+  private def saltProbeCol(saltF: Int, hotKeys: Option[Array[Long]]): Column = {
     val all = lit((0 until saltF).toArray)
     hotKeys match {
       case Some(ks) =>
@@ -270,46 +242,71 @@ object BandJoin {
     out.distinct.toArray
   }
 
+  /** Split the per-chunk probe radius `tol` into (rIdx, rPrb), rIdx +
+    * rPrb = tol, minimizing total exploded rows: the probe side is 8×
+    * heavier (one row per dihedral variant), so weigh it 8×. 16-bit
+    * chunks, tol=2 → (2,0): 137+8 rows/chunk vs (1,1): 17+136 — and the
+    * shuffled probe side stays minimal. The same choice also minimizes
+    * JOIN COLLISIONS: expected collisions scale with the mask PRODUCT
+    * |B(rIdx)|·|B(rPrb)| (each side lands in that many buckets), and the
+    * product is minimized at the extremes — (2,0): 137·1 vs (1,1):
+    * 17·17=289. Feasibility (per-side mask cap) is checked ARITHMETICALLY
+    * before any mask array materializes, so an infeasible width/threshold
+    * combination fails fast (maskCount grows as C(bits, tol) — e.g. 64-bit
+    * chunks at threshold 63 would need ~10¹³ masks and must never reach
+    * the driver-side lit() build). */
+  private[graft] def radiusSplit(tol: Int, chunkBits: Int): (Int, Int) = {
+    val feasible = (0 to tol).filter(r =>
+      maskCount(r, chunkBits) <= MaxMasksPerSide &&
+        maskCount(tol - r, chunkBits) <= MaxMasksPerSide)
+    require(feasible.nonEmpty,
+      s"radius $tol over $chunkBits-bit chunks: no probe-radius split fits " +
+        s"$MaxMasksPerSide masks/side — lower the threshold or use narrower chunks")
+    val rIdx = feasible.minBy(r =>
+      maskCount(r, chunkBits) + 8L * maskCount(tol - r, chunkBits))
+    (rIdx, tol - rIdx)
+  }
+
   /** All 16 chunks of (h0..h3) as an array column: chunk k = little-endian
     * u16 k of the 256-bit hash — static shifts, fully codegen'd. */
   def chunksArray(h: Seq[Column]): Column =
-    array((0 until NumChunks).map { k =>
+    array((0 until 16).map { k =>
       shiftrightunsigned(h(k / 4), (k % 4) * 16)
         .bitwiseAND(lit(0xffffL)).cast("int")
     }: _*)
 
-  /** Generalized chunk extraction: 256/bits chunks of width `bits` (8, 16,
-    * 32 or 64) as longs — the MIH chunk-count knob. The reference pins 16
-    * chunks (right for n≈10⁶: E[bucket] = n/2¹⁶ ≈ 15); at corpus scale the
-    * optimal chunk count shrinks toward 256/log₂(n) (Norouzi et al., "Fast
-    * Search in Hamming Space with Multi-Index Hashing", CVPR'12), so 8×32-bit
-    * chunks keep buckets sparse at n≈10⁹⁺. See SCALING.md for the cost model. */
+  /** Generalized chunk extraction: the 64·h.size/bits chunks of width `bits`
+    * (8, 16, 32 or 64) of a hash carried as the longs `h`, low bits first
+    * (hamminghash.rs:29-33 generalized), as longs — the MIH chunk-count
+    * knob. The reference pins 16 chunks for PDQ (right for n≈10⁶:
+    * E[bucket] = n/2¹⁶ ≈ 15); at corpus scale the optimal chunk count
+    * shrinks toward bits/log₂(n) (Norouzi et al., "Fast Search in Hamming
+    * Space with Multi-Index Hashing", CVPR'12), so 8×32-bit chunks keep
+    * buckets sparse at n≈10⁹⁺. See SCALING.md for the cost model. */
   def chunksArrayB(h: Seq[Column], bits: Int): Column = {
     require(Set(8, 16, 32, 64)(bits), s"chunk width $bits must divide 64")
     val perLong = 64 / bits
     val mask = if (bits == 64) -1L else (1L << bits) - 1
-    array((0 until 256 / bits).map { k =>
+    array((0 until 64 * h.size / bits).map { k =>
       shiftrightunsigned(h(k / perLong), (k % perLong) * bits)
         .bitwiseAND(lit(mask)).cast("long")
     }: _*)
   }
 
-  /** Σ bit_count(xor) over the 4 longs — 256-bit Hamming distance as a
+  /** Σ bit_count(xor) over the hash longs — Hamming distance as a
     * codegen'd Catalyst expression (hamminghash.rs:55-58 semantics). */
   def hammingCols(a: Seq[Column], b: Seq[Column]): Column =
     a.zip(b).map { case (x, y) => bit_count(x.bitwiseXOR(y)) }.reduce(_ + _)
 
   /** Explode a hash-carrying frame into (band_idx, band_val) keys with
-    * radius-r multi-probe masks. `hs` are the 4 hash columns to band on. */
+    * radius-r multi-probe masks. `hs` are the hash longs to band on. */
   private def bandKeys(df: DataFrame, hs: Seq[String], radius: Int,
-                       chunkBits: Int): DataFrame = {
-    val h = hs.map(col)
+                       chunkBits: Int): DataFrame =
     df.select(col("*"),
-        posexplode(chunksArrayB(h, chunkBits)).as(Seq("band_idx", "chunk")))
+        posexplode(chunksArrayB(hs.map(col), chunkBits)).as(Seq("band_idx", "chunk")))
       .withColumn("mask", explode(lit(masksB(radius, chunkBits))))
       .withColumn("band_val", col("chunk").bitwiseXOR(col("mask")))
       .drop("chunk", "mask")
-  }
 
   /**
    * Fuzzy duplicate edges among confident rows: band join + Hamming ≤
@@ -325,40 +322,42 @@ object BandJoin {
    * `saltFactor` = 0 (the default) MEASURES the top bucket and engages a
    * derived factor only past [[SaltBucketCap]] — see [[autoSaltFactor]].
    *
-   * `sig` needs: ord, h0..h3, variants, low_conf, has_pdq.
-   * Returns (a, b, dist) with a < b.
+   * `sig` needs: ord, the layout's hash and variants columns, low_conf,
+   * has_pdq. Returns (a, b, dist) with a < b.
    */
   def fuzzyEdges(sig: DataFrame, threshold: Int, saltFactor: Int = 0,
-                 chunkBits: Int = 0, nConfHint: Long = -1): DataFrame = {
+                 chunkBits: Int = 0, nConfHint: Long = -1,
+                 layout: HashLayout = HashLayout.Pdq): DataFrame = {
     val conf = sig.filter(col("has_pdq") && !col("low_conf"))
     // Round-6 rep collapse (guide §2.3 "shuffle fewer bytes" / §8 "decide
     // with small rows"): whether two rows collide in the band join, and
-    // the verified distance of the pair, depend ONLY on (h0..h3, variants)
+    // the verified distance of the pair, depend ONLY on (hash, variants)
     // — never on ord. Rows sharing them (lossless transcodes, exact
     // copies, re-containered pixels) are collapsed to one REPRESENTATIVE
     // before the ×(numChunks·masks) band explode; collision volume falls
     // with the SQUARE of the distinct ratio. The edge set is then rebuilt
-    // exactly: intra-cluster pairs are all C(k,2) pairs at dist 0 (the
-    // identity variant is variants(0)); cross-cluster member pairs inherit
-    // their rep pair's dist because dist is hash-determined.
-    val win = Window.partitionBy("h0", "h1", "h2", "h3", "variants")
-    val members = conf.select("ord", "h0", "h1", "h2", "h3", "variants")
-      .withColumn("rep", min("ord").over(win))
+    // exactly: intra-cluster pairs are all C(k,2) pairs at dist 0 (every
+    // producer puts the original hash among its variants, the reference's
+    // store-1/query-8); cross-cluster member pairs inherit their rep
+    // pair's dist because dist is hash-determined.
+    val keyCols = (layout.hashCols :+ layout.variantsCol).map(col)
+    val members = conf.select(col("ord") +: keyCols: _*)
+      .withColumn("rep", min("ord").over(Window.partitionBy(keyCols: _*)))
     val mem = members.select(col("rep"), col("ord"))
     val reps = members.where(col("ord") === col("rep"))
-      .select("ord", "h0", "h1", "h2", "h3", "variants")
-      .withColumn("has_pdq", lit(true))
-      .withColumn("low_conf", lit(false))
-    // resolve the shared count ONCE over the ORIGINAL conf rows, so the
-    // auto chunk-width decision is identical to the pre-collapse plan at
-    // every corpus size (the salt occupancy is measured over reps — the
-    // rows the join actually sees)
-    val nConf = resolveConfCount(conf, nConfHint,
-      needed = chunkBits == 0 || saltFactor == 0)
+      .select(col("ord") +: keyCols: _*)
+    // ONE count over the ORIGINAL conf rows feeds both auto knobs (width +
+    // salt), so the auto chunk-width decision is identical to the
+    // pre-collapse plan at every corpus size; a caller that pins both, or
+    // passes its already-known count, pays no job
+    val nConf =
+      if (nConfHint >= 0) nConfHint
+      else if (chunkBits == 0 || saltFactor == 0) conf.count()
+      else -1L
 
-    val repEdges = bandMatches(reps, threshold, saltFactor, chunkBits, nConf)
-      .withColumn("dist", hammingCols(Seq("v0", "v1", "v2", "v3").map(col),
-        Seq("c0", "c1", "c2", "c3").map(col)))
+    val repEdges = bandMatches(reps, threshold, saltFactor, chunkBits, nConf, layout)
+      .withColumn("dist", hammingCols(layout.names("v").map(col),
+        layout.names("c").map(col)))
       .where(col("dist") <= threshold)
       .groupBy(least(col("q_ord"), col("c_ord")).as("ra"),
         greatest(col("q_ord"), col("c_ord")).as("rb"))
@@ -378,58 +377,26 @@ object BandJoin {
     cross.unionByName(intra)
   }
 
-  /** The raw band-collision rows (post-join, pre-verify) — exposed for
-    * diagnostics (tools/JoinProbe) and the verify step above. */
-  private[graft] def bandMatches(sig: DataFrame, threshold: Int,
-                                 saltFactor: Int = 0,
-                                 chunkBits0: Int = BitsPerChunk,
-                                 nConfHint: Long = -1): DataFrame = {
-    val conf = sig.filter(col("has_pdq") && !col("low_conf"))
-    // ONE shared count feeds both auto knobs (width + salt); a caller
-    // that pins both, or passes its already-known count, pays no job
-    val nConf = resolveConfCount(conf, nConfHint,
-      needed = chunkBits0 == 0 || saltFactor == 0)
+  /** The raw band-collision rows (post-join, pre-verify) over confident
+    * rows `conf` with `nConf` of them (-1 when neither auto knob needs the
+    * count) — exposed for diagnostics (tools/JoinProbe) and the verify
+    * step above. Rows carry q_ord + v0..vK (probe variant) and c_ord +
+    * c0..cK (stored hash). */
+  private[graft] def bandMatches(conf: DataFrame, threshold: Int,
+                                 saltFactor: Int, chunkBits0: Int, nConf: Long,
+                                 layout: HashLayout): DataFrame = {
     val chunkBits = if (chunkBits0 != 0) chunkBits0 else {
-      val bits = autoChunkBits(nConf)
-      log.info(s"band join auto chunk width: $nConf confident rows -> $bits-bit chunks")
+      val bits = layout.autoChunkBits(nConf)
+      log.info(s"${layout.tag} band join auto chunk width: $nConf confident " +
+        s"rows -> $bits-bit chunks")
       bits
     }
-    val numChunks = 256 / chunkBits
-    // the reference caps similarity at 63 for EITHER hash width
-    // (group_files_generic asserts MAX_SIMILARITY_256, scanner.rs:1649-1655)
-    require(threshold <= 63,
-      s"similarity $threshold > 63 needs R=4 probing (scanner.rs:1649-1655)")
-    // pigeonhole: dist ≤ t over numChunks chunks ⇒ some chunk differs in
-    // ≤ ⌊t/numChunks⌋ bits — exhaustive recall at any chunk width
-    val tol = threshold / numChunks
-    // split the probe radius to minimize total exploded rows: the probe
-    // side is 8× heavier (one row per dihedral variant), so weigh it 8×.
-    // 16-bit chunks, tol=2 → (2,0): 137+8 rows/chunk vs (1,1): 17+136 —
-    // and the shuffled probe side stays minimal. The same choice also
-    // minimizes JOIN COLLISIONS: expected collisions scale with the mask
-    // PRODUCT |B(rIdx)|·|B(rPrb)| (each side lands in that many buckets),
-    // and the product is minimized at the extremes — (2,0): 137·1 vs
-    // (1,1): 17·17=289. One-sided radius wins on both counts. Feasibility (per-side mask
-    // cap) is checked ARITHMETICALLY before any mask array materializes, so
-    // an infeasible width/threshold combination fails fast (maskCount grows
-    // as C(bits, tol) — e.g. 64-bit chunks at threshold 63 would need ~10¹³
-    // masks and must never reach the driver-side lit() build).
-    val feasible = (0 to tol).filter(r =>
-      maskCount(r, chunkBits) <= MaxMasksPerSide &&
-        maskCount(tol - r, chunkBits) <= MaxMasksPerSide)
-    require(feasible.nonEmpty,
-      s"threshold $threshold over $chunkBits-bit chunks: no probe-radius " +
-        s"split fits $MaxMasksPerSide masks/side — lower the threshold or " +
-        s"use narrower chunks")
-    val rIdx = feasible.minBy(r =>
-      maskCount(r, chunkBits) + 8L * maskCount(tol - r, chunkBits))
-    val rPrb = tol - rIdx
+    val (rIdx, rPrb) = radiusSplit(layout.tolerance(threshold, chunkBits), chunkBits)
 
     val (saltF, hotKeySet) =
       if (saltFactor != 0) (saltFactor, None)
       else if (nConf <= AutoSaltMinRows) (1, None)
-      else autoSalt(conf, Seq("h0", "h1", "h2", "h3"), chunkBits,
-        chunksArrayB(_, chunkBits), rIdx)
+      else autoSalt(conf, layout.hashCols, chunkBits, rIdx)
 
     // Packed single-long join key (round 6, guide §2.3 narrower types):
     // band_idx (< 32) ∙ band_val (< 2^chunkBits ≤ 2^32) ∙ salt (6 bits,
@@ -444,36 +411,33 @@ object BandJoin {
     def packKey(idxC: Column, valC: Column, saltC: Column): Column =
       idxC.cast("long") * lit(1L << 38) + valC * lit(64L) + saltC
     val joinKeys = if (packed) Seq("bkey") else Seq("band_idx", "band_val", "salt")
+    def keyed(df: DataFrame, payload: Seq[String]): DataFrame =
+      if (!packed) df
+      else df.select(packKey(col("band_idx"), col("band_val"), col("salt")).as("bkey") +:
+        payload.map(col): _*)
 
-    val idx0 = bandKeys(
-      conf.select(col("ord"), col("h0"), col("h1"), col("h2"), col("h3")),
-      Seq("h0", "h1", "h2", "h3"), rIdx, chunkBits)
-      .select(col("band_idx"), col("band_val"), col("ord").as("c_ord"),
-        col("h0").as("c0"), col("h1").as("c1"), col("h2").as("c2"), col("h3").as("c3"))
-    val idx1 = if (saltF <= 1) idx0.withColumn("salt", lit(0))
-      else idx0.withColumn("salt", saltIndexCol(saltF, hotKeySet, col("c_ord")))
-    val idx = if (!packed) idx1
-      else idx1.select(
-        packKey(col("band_idx"), col("band_val"), col("salt")).as("bkey"),
-        col("c_ord"), col("c0"), col("c1"), col("c2"), col("c3"))
+    val idx0 = bandKeys(conf.select(col("ord") +: layout.hashCols.map(col): _*),
+        layout.hashCols, rIdx, chunkBits)
+      .select(col("band_idx") +: col("band_val") +: col("ord").as("c_ord") +:
+        layout.hashAs("c"): _*)
+    val idx = keyed(
+      if (saltF <= 1) idx0.withColumn("salt", lit(0))
+      else idx0.withColumn("salt", saltIndexCol(saltF, hotKeySet, col("c_ord"))),
+      "c_ord" +: layout.names("c"))
 
     // array_distinct: symmetric images repeat dihedral hashes (rot180 ==
     // id etc.); duplicate variant rows would generate duplicate collisions
     // that the verify pays for and the groupBy then discards
-    val prbBase = conf
-      .select(col("ord"), explode(array_distinct(col("variants"))).as("v"))
-      .select(col("ord"),
-        col("v").getItem(0).as("v0"), col("v").getItem(1).as("v1"),
-        col("v").getItem(2).as("v2"), col("v").getItem(3).as("v3"))
-    val prb0 = bandKeys(prbBase, Seq("v0", "v1", "v2", "v3"), rPrb, chunkBits)
-      .select(col("band_idx"), col("band_val"), col("ord").as("q_ord"),
-        col("v0"), col("v1"), col("v2"), col("v3"))
-    val prb1 = if (saltF <= 1) prb0.withColumn("salt", lit(0))
-      else prb0.withColumn("salt", explode(saltProbeCol(saltF, hotKeySet)))
-    val prb = if (!packed) prb1
-      else prb1.select(
-        packKey(col("band_idx"), col("band_val"), col("salt")).as("bkey"),
-        col("q_ord"), col("v0"), col("v1"), col("v2"), col("v3"))
+    val vNames = layout.names("v")
+    val prbBase = layout.explodeVariants(conf,
+      array_distinct(col(layout.variantsCol)), vNames, col("ord"))
+    val prb0 = bandKeys(prbBase, vNames, rPrb, chunkBits)
+      .select(col("band_idx") +: col("band_val") +: col("ord").as("q_ord") +:
+        vNames.map(col): _*)
+    val prb = keyed(
+      if (saltF <= 1) prb0.withColumn("salt", lit(0))
+      else prb0.withColumn("salt", explode(saltProbeCol(saltF, hotKeySet))),
+      "q_ord" +: vNames)
 
     // Symmetric probing (vs the reference's scan-order-dependent i<j,
     // scanner.rs:1714-1717): a pair is an edge when EITHER side's dihedral
@@ -501,18 +465,15 @@ object BandJoin {
    * variant) links to the hub. Components are identical to pairwise edges
    * at linear instead of quadratic edge count.
    */
-  def exactEdges(sig: DataFrame): DataFrame = {
-    val withPdq = sig.filter(col("has_pdq"))
-    val hubs = withPdq.groupBy("h0", "h1", "h2", "h3")
+  def exactEdges(sig: DataFrame, layout: HashLayout = HashLayout.Pdq): DataFrame = {
+    val withHash = sig.filter(col("has_pdq"))
+    val hubs = withHash.groupBy(layout.hashCols.map(col): _*)
       .agg(min("ord").as("hub"))
-    val vars = withPdq
-      .select(col("ord"), explode(array_distinct(col("variants"))).as("v"))
-      .select(col("ord"),
-        col("v").getItem(0).as("h0"), col("v").getItem(1).as("h1"),
-        col("v").getItem(2).as("h2"), col("v").getItem(3).as("h3"))
+    val vars = layout.explodeVariants(withHash,
+      array_distinct(col(layout.variantsCol)), layout.hashCols, col("ord"))
     // both sides scale with N (hubs ≈ distinct hashes) — never broadcast;
     // sort-merge degrades gracefully on the skewed identical-hash keys
-    vars.hint("shuffle_merge").join(hubs, Seq("h0", "h1", "h2", "h3"))
+    vars.hint("shuffle_merge").join(hubs, layout.hashCols)
       .where(col("ord") =!= col("hub"))
       .select(least(col("ord"), col("hub")).as("a"),
         greatest(col("ord"), col("hub")).as("b"), lit(0).as("dist"))
@@ -532,14 +493,16 @@ object BandJoin {
         greatest(col("ord"), col("hub")).as("b"), lit(0).as("dist"))
   }
 
-  /** All verified duplicate edges (a < b, minimal dist per pair).
-    * `chunkBits = 0` auto-selects the MIH width from the corpus size;
-    * `saltFactor = 0` auto-engages hot-bucket salting past the cap;
-    * `nConfHint` lets a caller that already knows the confident-row count
-    * (Pipeline's signatures-stage metric) skip the resolution job. */
+  /** All verified duplicate edges (a < b, minimal dist per pair) over the
+    * hash `layout` (PDQ by default). `chunkBits = 0` auto-selects the MIH
+    * width from the corpus size; `saltFactor = 0` auto-engages hot-bucket
+    * salting past the cap; `nConfHint` lets a caller that already knows
+    * the confident-row count (Pipeline's signatures-stage metric) skip
+    * the resolution job. */
   def edges(sig: DataFrame, threshold: Int, saltFactor: Int = 0,
-            chunkBits: Int = 0, nConfHint: Long = -1): DataFrame =
-    fuzzyEdges(sig, threshold, saltFactor, chunkBits, nConfHint)
-      .unionByName(exactEdges(sig))
+            chunkBits: Int = 0, nConfHint: Long = -1,
+            layout: HashLayout = HashLayout.Pdq): DataFrame =
+    fuzzyEdges(sig, threshold, saltFactor, chunkBits, nConfHint, layout)
+      .unionByName(exactEdges(sig, layout))
       .groupBy("a", "b").agg(min("dist").as("dist"))
 }

@@ -12,6 +12,7 @@ object BenchOne {
     val reps = if (args.length > 3) args(3).toInt else 2
     val spark = Pipeline.session(s"local[$cpus]", shufflePartitions = math.max(cpus.toInt, 8))
     spark.sparkContext.setLogLevel("WARN")
+    graft.Bench.warmUp(spark)
     // JIT/codegen warmup on a small corpus so N and 4N measure steady state
     val warmupDir = s"$workDir/warmup-corpus"
     Synth.generate(spark, 300, warmupDir)

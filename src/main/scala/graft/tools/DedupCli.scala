@@ -32,11 +32,8 @@ object DedupCli {
       else java.nio.file.Files.createTempDirectory("graft-dedup").toString
     val algorithm = if (args.length > 3) args(3) else "pdq"
     // "-" or "" for threshold = use the algorithm's default
-    val threshold = args.lift(2).filter(t => t.nonEmpty && t != "-") match {
-      case Some(t) => t.toInt
-      case None if algorithm == "phash" => graft.lsh.BandJoin64.DefaultThreshold
-      case None => Pipeline.DefaultThreshold
-    }
+    val threshold = args.lift(2).filter(t => t.nonEmpty && t != "-")
+      .map(_.toInt).getOrElse(graft.lsh.HashLayout.forAlgorithm(algorithm).defaultThreshold)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
 
     val spark = Pipeline.session(s"local[$cpus]")

@@ -57,10 +57,7 @@ object MaintenanceCli {
         // (hwm.getOrElse(default) would silently override it and make
         // widening unreachable until an incremental run happened by).
         val algo = BandIndex.algoOf(spark, indexPath)
-        val default =
-          if (algo == BandIndex.AlgoPhash64)
-            graft.lsh.BandJoin64.DefaultThreshold
-          else Pipeline.DefaultThreshold
+        val default = graft.lsh.HashLayout.forTag(algo).defaultThreshold
         val hwm = CorpusState.hwm(spark, corpusWork, s"thr_hwm_$algo")
         val thr = math.max(thresholdArg.getOrElse(default), hwm.getOrElse(0))
         val widened = BandIndex.maybeWiden(spark, indexPath, curSig, thr)

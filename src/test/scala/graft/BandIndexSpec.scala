@@ -170,7 +170,7 @@ class BandIndexSpec extends AnyFunSuite {
     val thr = graft.lsh.BandJoin64.DefaultThreshold
     val dir = java.nio.file.Files.createTempDirectory("graft-bandindex-ph").toString
     BandIndex.build(corpus.toDS().toDF(), s"$dir/index",
-      chunkBits = graft.lsh.BandJoin64.BitsPerChunk, algo = BandIndex.AlgoPhash64)
+      chunkBits = graft.lsh.HashLayout.Phash64.parityBits, algo = BandIndex.AlgoPhash64)
     assert(BandIndex.algoOf(spark, s"$dir/index") == BandIndex.AlgoPhash64)
     val got = BandIndex.probe(spark, s"$dir/index", delta.toDS().toDF(), thr)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
@@ -244,7 +244,7 @@ class BandIndexSpec extends AnyFunSuite {
       xs.map(x => if (x.ord % 5 == 0) x.copy(low_conf = true) else x).toDS().toDF()
     val (c, d) = (low(corpus), low(delta))
     for ((algo, bits, thr) <- Seq((BandIndex.AlgoPdq, 16, Threshold),
-        (BandIndex.AlgoPhash64, graft.lsh.BandJoin64.BitsPerChunk,
+        (BandIndex.AlgoPhash64, graft.lsh.HashLayout.Phash64.parityBits,
           graft.lsh.BandJoin64.DefaultThreshold))) {
       val dir = java.nio.file.Files.createTempDirectory("graft-bandindex-pend").toString
       BandIndex.build(c, s"$dir/pending", chunkBits = bits, algo = algo)

@@ -13,4 +13,13 @@ class BenchSpec extends AnyFunSuite {
       assert(e.getMessage.contains("malformed size"), s"'$s': ${e.getMessage}")
     }
   }
+
+  test("a throwing headline query lands in failed, untimed") {
+    val (timed, failed) = Bench.timeQueries(Seq("q_ok", "q_boom", "q_ok2")) { n =>
+      if (n == "q_boom") throw new IllegalStateException("boom")
+    }
+    assert(timed.map(_._1) == Seq("q_ok", "q_ok2"))
+    assert(timed.forall(_._2 >= 0.0))
+    assert(failed == Seq("q_boom"))
+  }
 }

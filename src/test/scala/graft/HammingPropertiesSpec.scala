@@ -35,28 +35,36 @@ class HammingPropertiesSpec extends AnyFunSuite {
   }
 
   test("width-generic pigeonhole + chunk reconstruction (8/16/32/64-bit)") {
+    import graft.lsh.HashLayout
     import org.apache.spark.sql.functions.col
     val spark = SparkTestSession.spark
     import spark.implicits._
-    for (bits <- Seq(8, 16, 32, 64)) {
-      val m = 256 / bits
-      // chunk reconstruction: extracting every chunk and re-assembling
-      // recovers the 4 longs, at any width
-      val hs = samples(genHash, 40).map(Pdq.toLongs)
-      val df = hs.map(l => (l(0), l(1), l(2), l(3))).toDF("h0", "h1", "h2", "h3")
+    // chunk reconstruction: extracting every chunk and re-assembling
+    // recovers the hash longs, at any width, for the 4-long PDQ layout and
+    // the 1-long pHash layout
+    val hs = samples(genHash, 40).map(Pdq.toLongs)
+    val df = hs.map(l => (l(0), l(1), l(2), l(3))).toDF("h0", "h1", "h2", "h3")
+      .withColumn("phash64", col("h0"))
+    for ((layout, widths) <- Seq(HashLayout.Pdq -> Seq(8, 16, 32, 64),
+        HashLayout.Phash64 -> Seq(8, 16, 32)); bits <- widths) {
+      val longs = layout.hashCols.size
       val chunks = df.select(
-        graft.lsh.BandJoin.chunksArrayB(Seq("h0", "h1", "h2", "h3").map(col), bits)
-          .as("cs"), col("h0"), col("h1"), col("h2"), col("h3")).collect()
+        graft.lsh.BandJoin.chunksArrayB(layout.hashCols.map(col), bits).as("cs") +:
+          layout.hashCols.map(col): _*).collect()
       chunks.foreach { r =>
         val cs = r.getSeq[Long](0)
+        assert(cs.size == layout.bits / bits, s"${layout.tag} bits=$bits chunk count")
         val perLong = 64 / bits
-        val rebuilt = (0 until 4).map { w =>
+        val rebuilt = (0 until longs).map { w =>
           (0 until perLong).map(k => cs(w * perLong + k) << (k * bits))
             .foldLeft(0L)(_ | _)
         }
-        assert(rebuilt == Seq(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)),
-          s"bits=$bits reconstruction failed")
+        assert(rebuilt == (1 to longs).map(r.getLong),
+          s"${layout.tag} bits=$bits reconstruction failed")
       }
+    }
+    for (bits <- Seq(8, 16, 32, 64)) {
+      val m = 256 / bits
       // pigeonhole at width `bits`: dist ≤ t ⇒ some chunk differs ≤ ⌊t/m⌋,
       // and a radius-⌊t/m⌋ mask on either side therefore collides
       for ((h, flips) <- samples(genHash, 150).zip(samples(genBits, 150))) {

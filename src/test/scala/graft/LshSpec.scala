@@ -250,15 +250,15 @@ class LshSpec extends AnyFunSuite {
   }
 
   test("auto chunk width resolves by corpus size (chunkBits = 0 default)") {
-    import graft.lsh.{BandJoin, BandJoin64}
+    import graft.lsh.HashLayout.{Pdq, Phash64}
     // 256-bit path: 16-bit parity up to the measured cutoff, then 32
-    assert(BandJoin.autoChunkBits(1000) == 16)
-    assert(BandJoin.autoChunkBits(BandJoin.AutoWideCutoff) == 16)
-    assert(BandJoin.autoChunkBits(BandJoin.AutoWideCutoff + 1) == 32)
+    assert(Pdq.autoChunkBits(1000) == 16)
+    assert(Pdq.autoChunkBits(Pdq.wideCutoff) == 16)
+    assert(Pdq.autoChunkBits(Pdq.wideCutoff + 1) == 32)
     // u64 path: 8-bit parity to 1e5 (measured 10x degeneracy past it)
-    assert(BandJoin64.autoChunkBits(1000) == 8)
-    assert(BandJoin64.autoChunkBits(BandJoin64.AutoWideCutoff) == 8)
-    assert(BandJoin64.autoChunkBits(BandJoin64.AutoWideCutoff + 1) == 16)
+    assert(Phash64.autoChunkBits(1000) == 8)
+    assert(Phash64.autoChunkBits(Phash64.wideCutoff) == 8)
+    assert(Phash64.autoChunkBits(Phash64.wideCutoff + 1) == 16)
     // the Pipeline-facing default: explicit 0 behaves like tiny-corpus
     // parity on a small frame (same edges as pinned widths)
     val r = new java.util.Random(21)
@@ -295,18 +295,18 @@ class LshSpec extends AnyFunSuite {
       (i, (r.nextLong() << 16) | 0xabcdL, r.nextLong(), r.nextLong(), r.nextLong())
     }.toDF("ord", "h0", "h1", "h2", "h3")
     val f = graft.lsh.BandJoin.autoSaltFactor(hot, Seq("h0", "h1", "h2", "h3"),
-      16, graft.lsh.BandJoin.chunksArrayB(_, 16), cap = 1000)
+      16, cap = 1000)
     assert(f == 3, s"derived salt factor $f, want 3")
     // an unskewed corpus stays at 1 (salting never engages spuriously)
     val cold = (0L until 2500L).map { i =>
       (i, r.nextLong(), r.nextLong(), r.nextLong(), r.nextLong())
     }.toDF("ord", "h0", "h1", "h2", "h3")
     assert(graft.lsh.BandJoin.autoSaltFactor(cold, Seq("h0", "h1", "h2", "h3"),
-      16, graft.lsh.BandJoin.chunksArrayB(_, 16), cap = 1000) == 1)
+      16, cap = 1000) == 1)
     // the factor is bounded: a million-row hot bucket cannot explode the
     // probe side ×5 — MaxSaltFactor clamps
     assert(graft.lsh.BandJoin.autoSaltFactor(hot, Seq("h0", "h1", "h2", "h3"),
-      16, graft.lsh.BandJoin.chunksArrayB(_, 16), cap = 10)
+      16, cap = 10)
       == graft.lsh.BandJoin.MaxSaltFactor)
   }
 
@@ -328,10 +328,10 @@ class LshSpec extends AnyFunSuite {
     // radius-0 max is ~100 (< cap 1000) but the radius-1 ball at `center`
     // holds all 1700 rows -> factor 2
     assert(graft.lsh.BandJoin.autoSaltFactor(spread, Seq("h0", "h1", "h2", "h3"),
-      16, graft.lsh.BandJoin.chunksArrayB(_, 16), rIdx = 0, cap = 1000) == 1,
+      16, rIdx = 0, cap = 1000) == 1,
       "radius-0 measurement must NOT see the spread mass (the old undershoot)")
     val f = graft.lsh.BandJoin.autoSaltFactor(spread, Seq("h0", "h1", "h2", "h3"),
-      16, graft.lsh.BandJoin.chunksArrayB(_, 16), rIdx = 1, cap = 1000)
+      16, rIdx = 1, cap = 1000)
     assert(f == 2, s"ball-occupancy salt factor $f, want 2")
   }
 
